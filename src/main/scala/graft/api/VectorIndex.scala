@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Artifacts, BinaryIndex, FlatQuantizer, GraphAnn, GraphMaintenance, GraphQuantizer, IvfIndex, Knn, LshIndex, PqIndex, RoutedGraphQuantizer, RoutedQuantizer, SqIndex, Tombstones, Upsert}
 
@@ -108,7 +109,9 @@ class VectorIndex private (
     private val loadedBounds: Option[(Array[Double], Array[Double])] = None,
     private val loadedPath: Option[String] = None,
     private val loadedQuantizer: Option[GraphQuantizer] = None,
-    private val loadedRouteCents0: () => Option[Array[Array[Float]]] = () => None) {
+    private val loadedRouteCents0: () => Option[Array[Array[Float]]] = () => None,
+    private val loadedServeSchemas0: () => Option[(StructType, StructType)] = () => None,
+    private val inlineCap: Int = Tombstones.InlineCap) {
 
   import VectorIndex._
 
@@ -119,6 +122,14 @@ class VectorIndex private (
     * ([[loadedGraphRoute]]). Frozen at build, so memoizing is safe.
     */
   private lazy val loadedRouteCents: Option[Array[Array[Float]]] = loadedRouteCents0()
+
+  /** The (entries, edges) serving schemas with `gen` forced in, memoized
+    * per handle and inferred lazily — a serve call replays them instead
+    * of paying two schema-inference jobs. Mutations append rows of the
+    * same schemas (gen is forced present either way), so the memo
+    * outlives them; the tombstone sidecar is still read per call.
+    */
+  private lazy val loadedServeSchemas: Option[(StructType, StructType)] = loadedServeSchemas0()
 
   private def requireDim(vector: Array[Float]): Unit =
     require(vector.length == key.dim,
@@ -181,11 +192,35 @@ class VectorIndex private (
     * stale cached frames (stale answers, or FILE_NOT_EXIST after a
     * compact swapped the files underneath).
     */
-  private def reopened(p: String): VectorIndex = {
+  private def reopened(view: Tombstones.View): VectorIndex = {
+    val p = view.base
     spark.catalog.refreshByPath(p)
-    new VectorIndex(key, params, spark, VectorIndex.liveGraphData(spark, p),
+    val serveSchemas = for {
+      es <- view.schema("serve/entries"); gs <- view.schema("serve/edges")
+    } yield (es, gs)
+    new VectorIndex(key, params, spark, liveGraphData(view.read("data"), p),
       loadedCentroids, loadedCodebooks, loadedBounds, loadedPath, loadedQuantizer,
-      loadedRouteCents0)
+      loadedRouteCents0, () => serveSchemas, inlineCap)
+  }
+
+  /** The same handle with another cap on the tombstone rows its verbs
+    * and serve calls fold on the driver ([[Tombstones.View]],
+    * [[Tombstones.inlineTombs]]); cap 0 takes the broadcast-join
+    * filters everywhere — how the tests pin the two forks to the same
+    * answers.
+    */
+  private[graft] def withInlineCap(cap: Int): VectorIndex =
+    new VectorIndex(key, params, spark, state, loadedCentroids, loadedCodebooks,
+      loadedBounds, loadedPath, loadedQuantizer, loadedRouteCents0, loadedServeSchemas0, cap)
+
+  /** Open the verb's artifact view under the lease and settle any
+    * crashed predecessor through it, so the verb's probes see a
+    * consistent standing state.
+    */
+  private def openView(p: String, q: GraphQuantizer): Tombstones.View = {
+    val view = GraphMaintenance.view(spark, p, inlineCap)
+    GraphMaintenance.recoverIfInflight(view, q, params.graphK, key.metricType.name)
+    view
   }
 
   /** Loud guard for the maintained-GRAPH ingest paths, now needed only
@@ -196,16 +231,26 @@ class VectorIndex private (
     * hide them (the hazard [[graft.api.TextIndex.append]] guards
     * against).
     */
-  private def requireNotForeverTombstoned(p: String, batch: DataFrame): Unit =
-    if (Tombstones.present(spark, p)) {
-      val t = Tombstones.tombs(spark, p).where(col("upto") === Long.MaxValue)
-      val hit = batch.select(col("id")).join(t, Seq("id"), "leftsemi")
-        .limit(1).collect()
-      require(hit.isEmpty,
-        s"id ${hit.headOption.map(_.get(0)).orNull} carries a kill-all tombstone in " +
-          s"$p (written by a pre-generation delete) — its rows would be hidden by " +
-          "the read filter; save() a compacted copy before reusing it")
-    }
+  private def requireNotForeverTombstoned(view: Tombstones.View, batch: DataFrame): Unit = {
+    // the view's fold answers on the driver; with no kill-all row there
+    // is nothing to probe
+    val forever = view.inline.map(_.collect { case (id, u) if u == Long.MaxValue => id }.toSet)
+    val hit =
+      if (forever.exists(_.isEmpty)) None
+      else {
+        val ids = batch.select(col("id"))
+        (forever, Tombstones.collectAtMost(ids, Tombstones.InlineCap)) match {
+          case (Some(f), Some(rows)) => rows.map(_.getLong(0)).find(f)
+          case _ =>
+            val t = Tombstones.tombs(spark, view.base).where(col("upto") === Long.MaxValue)
+            ids.join(t, Seq("id"), "leftsemi").limit(1).collect().headOption.map(_.getLong(0))
+        }
+      }
+    require(hit.isEmpty,
+      s"id ${hit.orNull} carries a kill-all tombstone in " +
+        s"${view.base} (written by a pre-generation delete) — its rows would be hidden by " +
+        "the read filter; save() a compacted copy before reusing it")
+  }
 
   /** Bulk append; `rows` needs columns (id, vectors[, data]). The dim
     * check (reference BAD_REQUEST, app_error.rs) is part of the plan —
@@ -224,17 +269,14 @@ class VectorIndex private (
       // single-writer across processes: the new-nodes-only probe and
       // the layout append must not interleave with another writer's
       Artifacts.withLease(spark, p, "VectorIndex.insertAll") {
-        // settle any crashed predecessor first, so the probes below see
-        // a consistent standing state
-        GraphMaintenance.recoverIfInflight(spark, p, q, params.graphK,
-          key.metricType.name)
+        val view = openView(p, q)
         val batch = normalize(rows, key.dim)
-        requireNotForeverTombstoned(p, batch)
+        requireNotForeverTombstoned(view, batch)
         // new-nodes-only: a re-ingested LIVE id would duplicate its
         // layout rows and corrupt later batches' candidate sets (upsert
         // is the verb for replacement); probe-pruned via the _ids sidecar
-        val dup = GraphMaintenance.liveOverlap(spark, p, batch.select(col("id")))
-          .limit(1).collect()
+        val dup = Tombstones.takeRows(
+          GraphMaintenance.liveOverlap(view, batch.select(col("id"))), 1)
         require(dup.isEmpty,
           s"insertAll is new-nodes-only: id ${dup.headOption.map(_.get(0)).orNull} " +
             "is already live in the standing layout (re-appending would duplicate " +
@@ -242,9 +284,9 @@ class VectorIndex private (
         // every mutating batch gets its own generation stamp, so a
         // previously-deleted id re-inserted here outlives its tombstone
         // (gen > upto) with no compact needed
-        GraphMaintenance.ingest(spark, p, batch, q, params.graphK,
+        GraphMaintenance.ingest(view, batch, q, params.graphK,
           key.metricType.name, "insert")
-        reopened(p)
+        reopened(view)
       }
     case None =>
       withFreshState(bare.unionByName(normalize(rows, key.dim), allowMissingColumns = false))
@@ -285,13 +327,12 @@ class VectorIndex private (
   def upsertAll(rows: DataFrame): VectorIndex = maintainedGraph match {
     case Some((p, q)) =>
       Artifacts.withLease(spark, p, "VectorIndex.upsertAll") {
-        GraphMaintenance.recoverIfInflight(spark, p, q, params.graphK,
-          key.metricType.name)
+        val view = openView(p, q)
         val batch = normalize(rows, key.dim)
-        requireNotForeverTombstoned(p, batch)
-        GraphMaintenance.ingest(spark, p, batch, q, params.graphK,
+        requireNotForeverTombstoned(view, batch)
+        GraphMaintenance.ingest(view, batch, q, params.graphK,
           key.metricType.name, "upsert")
-        reopened(p)
+        reopened(view)
       }
     case None =>
       withFreshState(Upsert.merge(bare, normalize(rows, key.dim), "id"))
@@ -315,8 +356,7 @@ class VectorIndex private (
   def deleteAll(ids: DataFrame): VectorIndex = maintainedGraph match {
     case Some((p, q)) =>
       Artifacts.withLease(spark, p, "VectorIndex.deleteAll") {
-        GraphMaintenance.recoverIfInflight(spark, p, q, params.graphK,
-          key.metricType.name)
+        val view = openView(p, q)
         // the delete advances the generation and tombstones at
         // upto = g-1 ("everything prior"): every current row of the id
         // dies, while the id stays REUSABLE — a later insert/upsert
@@ -325,9 +365,9 @@ class VectorIndex private (
         // killed medoid entry's cluster, re-link nodes the dead edges
         // starved) and runs the growth policy off the maintained
         // manifest — a crash anywhere resumes at the next verb/load.
-        GraphMaintenance.remove(spark, p, ids.select(col("id").cast("long")),
+        GraphMaintenance.remove(view, ids.select(col("id").cast("long")),
           q, params.graphK, key.metricType.name)
-        reopened(p)
+        reopened(view)
       }
     case None =>
       withState(Upsert.delete(state, ids.select(col("id").cast("long")), "id"))
@@ -344,12 +384,10 @@ class VectorIndex private (
   def compact(): VectorIndex = maintainedGraph match {
     case Some((p, q)) if Tombstones.present(spark, p) =>
       Artifacts.withLease(spark, p, "VectorIndex.compact") {
-        GraphMaintenance.recoverIfInflight(spark, p, q, params.graphK,
-          key.metricType.name)
-        Tombstones.compact(spark, p, GraphMaintenance.compactTables(spark, p))
-        GraphMaintenance.afterCompact(spark, p, q,
-          Tombstones.currentGen(spark, p))
-        reopened(p)
+        val view = openView(p, q)
+        Tombstones.compact(view, GraphMaintenance.compactTables(spark, p))
+        GraphMaintenance.afterCompact(view, q, Tombstones.currentGen(spark, p))
+        reopened(view)
       }
     case _ => this
   }
@@ -427,21 +465,24 @@ class VectorIndex private (
     */
   private def loadedServe: Option[(DataFrame, DataFrame)] =
     loadedPath.map { p =>
-      val raw = Tombstones.readWithGen(spark, s"$p/serve/entries")
+      val (entrySchema, edgeSchema) = loadedServeSchemas.getOrElse((
+        Tombstones.genSchema(spark, s"$p/serve/entries"),
+        Tombstones.genSchema(spark, s"$p/serve/edges")))
+      val raw = Tombstones.readGen(spark, s"$p/serve/entries", entrySchema)
       // routed layouts persist each entry's route cell — keep it so a
       // routed walk reads the build-time assignment (legacy layouts
       // without the column stay route-less)
       val cols =
         if (raw.columns.contains("route_cell")) Seq(col("id"), col("vec"), col("route_cell"))
         else Seq(col("id"), col("vec"))
-      val edgesRaw = Tombstones.readWithGen(spark, s"$p/serve/edges")
+      val edgesRaw = Tombstones.readGen(spark, s"$p/serve/edges", edgeSchema)
       // these frames are REBUILT per serving call, so a bounded sidecar
       // inlines as a literal snapshot (one collect here) instead of the
       // per-action sidecar scan + broadcast the join filters would pay
       // on every driving collect of the walk; over the inline cap the
       // join filters stay — that path's shuffle envelope is the
       // measured at-scale story
-      Tombstones.inlineTombs(spark, p) match {
+      Tombstones.inlineTombs(spark, p, inlineCap) match {
         case Some(m) =>
           (Tombstones.filterGenInline(raw, "id", "gen", m).select(cols: _*),
            Tombstones.filterEdgesGenInline(edgesRaw, "src_id", "dst_id", "gen", m)
@@ -1037,15 +1078,13 @@ object VectorIndex {
     */
   private val PqKsub = 16
 
-  /** The LIVE rows of a maintained GRAPH artifact's data table:
-    * generation-stamped read (mergeSchema — stamped appends coexist
-    * with the build's files) with the generation-aware tombstone
-    * filter, gen dropped so the state looks like any other loaded
-    * state downstream.
+  /** The LIVE rows of a maintained GRAPH artifact's data table: its
+    * generation-stamped read `data` under the generation-aware
+    * tombstone filter, gen dropped so the state looks like any other
+    * loaded state downstream.
     */
-  private[api] def liveGraphData(spark: SparkSession, p: String): DataFrame =
-    Tombstones.filterGen(Tombstones.readWithGen(spark, s"$p/data"), p, "id", "gen")
-      .drop("gen")
+  private def liveGraphData(data: DataFrame, p: String): DataFrame =
+    Tombstones.filterGen(data, p, "id", "gen").drop("gen")
 
   /** reference: router/handle/create_index_handle.rs — registry init
     * keyed by (index_type, dim, metric_type); dim must be ≥ 1.
@@ -1135,7 +1174,8 @@ object VectorIndex {
         graphQuantizer().foreach { q =>
           val graphK = intOr("graph_k", 3)
           try Artifacts.withLease(spark, path, "VectorIndex.load/recover") {
-            GraphMaintenance.recoverIfInflight(spark, path, q, graphK, metric.name)
+            GraphMaintenance.recoverIfInflight(GraphMaintenance.view(spark, path), q,
+              graphK, metric.name)
           } catch {
             // lost the acquire race to a live writer — it will recover
             case _: IllegalStateException => ()
@@ -1148,7 +1188,8 @@ object VectorIndex {
     // GRAPH (upserted ids' superseded rows die, their replacements
     // live); absent sidecar = unchanged plan
     val state =
-      if (indexType == IndexType.GRAPH) liveGraphData(spark, path)
+      if (indexType == IndexType.GRAPH)
+        liveGraphData(Tombstones.readWithGen(spark, s"$path/data"), path)
       else Tombstones.filter(spark.read.parquet(s"$path/data"), path, "id")
     val quantizer =
       if (indexType == IndexType.GRAPH && state.columns.contains("cluster"))
@@ -1189,8 +1230,13 @@ object VectorIndex {
       if (fs.exists(rp)) Some(IvfIndex.readCentroids(spark, s"$p/serve/route"))
       else None
     }
+    // the serving tables' schemas, recorded on the first serve call
+    lazy val serveSchemas = rootPath.map(p => (
+      Tombstones.genSchema(spark, s"$p/serve/entries"),
+      Tombstones.genSchema(spark, s"$p/serve/edges")))
     new VectorIndex(IndexKey(indexType, m.getAs[Int]("dim"), metric), params, spark,
-      state, centroids, codebooks, bounds, rootPath, quantizer, () => routeCents)
+      state, centroids, codebooks, bounds, rootPath, quantizer, () => routeCents,
+      () => serveSchemas)
   }
 
   private def rowsDf(spark: SparkSession, rows: Seq[(Long, Array[Float], Option[String])]): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions._
@@ -26,15 +27,28 @@ import graft.functions._
   *  2. The DATA batch appends at generation `g` (one atomic Spark write
   *     job). From this moment the replacement rows exist; nothing below
   *     can make an id vanish.
-  *  3. [[complete]] finishes everything else, driven only by the marker
-  *     and the artifact state — so a crashed mutation is finished by
-  *     the next verb or by [[graft.api.VectorIndex.load]]:
-  *     serve-edge append (skipped if gen-`g` edge rows already exist —
-  *     the edge write is one atomic job, so any row means all rows),
-  *     tombstone of superseded rows at `upto = g-1` (recomputed from
-  *     the data itself: ids with rows at BOTH gen `g` and gen `< g`;
-  *     re-appending is idempotent under the max-`upto` read rule),
-  *     medoid-entry heal, starved-node re-link, marker clear.
+  *  3. [[publish]] finishes everything else, driven only by the
+  *     marker and the artifact state — so a crashed mutation is
+  *     finished by the next verb's entry recovery or by
+  *     [[graft.api.VectorIndex.load]] ([[complete]]): `_ids` append and
+  *     serve-edge append (on a RESUMED marker each is skipped if
+  *     gen-`g` rows already exist — each write is one atomic job, so
+  *     any row means all rows), tombstone of superseded rows at
+  *     `upto = g-1` (recomputed from the data itself: ids with rows at
+  *     BOTH gen `g` and gen `< g`; re-appending is idempotent under the
+  *     max-`upto` read rule), medoid-entry heal, starved-node re-link,
+  *     marker clear. The verb that just took `g` from `nextGen` skips
+  *     those existence probes: under its lease nothing else can carry
+  *     `g` yet.
+  *
+  * Every step reads through one [[Tombstones.View]] the verb opens
+  * after taking the lease (layout schemas inferred once, the sidecar
+  * folded once on the driver and kept current by the verb's own
+  * appends), and the heals are scoped to the batch: the entry heal and
+  * the `_entrycount` rewrite run only when a victim was a live entry
+  * or the batch landed in a cluster without one, and the re-link
+  * derives its victims, affected and starved sets from the fold plus
+  * two IN-pruned collects.
   *
   * Failure modes by window (the crash-injection matrix in ApiSpec):
   * before step 2 — the mutation simply never happened (a generation
@@ -134,6 +148,12 @@ object GraphMaintenance {
     */
   private val ProbeIsinMax = 8192
 
+  /** The `_ids` sidecar's rows as [[appendIds]] / [[writeIds]] write
+    * them — a fixed read schema, so probing it infers nothing.
+    */
+  private val IdsSchema = StructType(Seq(
+    StructField("id", LongType), StructField("gen", LongType)))
+
   def idsPresent(spark: SparkSession, p: String): Boolean =
     fsOf(spark, p).exists(new Path(idsPath(p)))
 
@@ -147,6 +167,16 @@ object GraphMaintenance {
       .repartition(1).sortWithinPartitions("id")
       .write.mode("append").option("parquet.block.size", (1L << 20).toString)
       .parquet(idsPath(p))
+
+  /** [[appendIds]] for driver-held ids: sorted here, so the one file is
+    * written from a single local partition with no shuffle.
+    */
+  private def appendIds(spark: SparkSession, p: String, ids: Array[Long], g: Long): Unit = {
+    import spark.implicits._
+    ids.sorted.toSeq.toDF("id").coalesce(1).withColumn("gen", lit(g))
+      .write.mode("append").option("parquet.block.size", (1L << 20).toString)
+      .parquet(idsPath(p))
+  }
 
   /** Write the sidecar fresh (save / compact): the full live id set at
     * one generation stamp per row, id-sorted with small row groups.
@@ -163,33 +193,32 @@ object GraphMaintenance {
     * existed — a narrow corpus scan, the shape this sidecar removes).
     */
   def standingIds(spark: SparkSession, p: String): DataFrame =
-    if (idsPresent(spark, p))
-      spark.read.parquet(idsPath(p)).select(col("id"), col("gen"))
-    else
-      Tombstones.readWithGen(spark, dataPath(p)).select(col("id"), col("gen"))
+    if (idsPresent(spark, p)) spark.read.schema(IdsSchema).parquet(idsPath(p))
+    else Tombstones.readWithGen(spark, dataPath(p)).select(col("id"), col("gen"))
+
+  private def standingIds(view: Tombstones.View): DataFrame =
+    (if (idsPresent(view.spark, view.base)) view.read("_ids") else view.read("data"))
+      .select(col("id"), col("gen"))
 
   /** The standing (id, gen) rows whose id appears in `batchIds` — the
     * one probe every mutation needs. Small batches push an `id IN`
     * predicate into the sidecar scan (row-group pruning: flat input
     * bytes as the corpus grows); large batches degrade to a semi-join.
     */
-  def standingOverlap(spark: SparkSession, p: String, batchIds: DataFrame): DataFrame = {
-    val standing = standingIds(spark, p)
-    val sample = batchIds.select(col(batchIds.columns.head).cast("long").as("id"))
-      .limit(ProbeIsinMax + 1).collect().map(_.getLong(0))
-    if (sample.length <= ProbeIsinMax)
-      standing.where(col("id").isin(sample.map(Long.box): _*))
-    else
-      standing.join(batchIds.select(col(batchIds.columns.head).cast("long").as("id")),
-        Seq("id"), "leftsemi")
+  def standingOverlap(view: Tombstones.View, batchIds: DataFrame): DataFrame = {
+    val ids = batchIds.select(col(batchIds.columns.head).cast("long").as("id"))
+    Tombstones.collectAtMost(ids, ProbeIsinMax) match {
+      case Some(rows) => standingIds(view).where(inIds(col("id"), rows.map(_.getLong(0))))
+      case None       => standingIds(view).join(ids, Seq("id"), "leftsemi")
+    }
   }
 
   /** LIVE overlap: the [[standingOverlap]] rows that survive the
     * generation-aware tombstone rule — what the insert verb's
     * new-nodes-only guard checks.
     */
-  def liveOverlap(spark: SparkSession, p: String, batchIds: DataFrame): DataFrame =
-    Tombstones.filterGen(standingOverlap(spark, p, batchIds), p, "id", "gen")
+  def liveOverlap(view: Tombstones.View, batchIds: DataFrame): DataFrame =
+    view.filterGen(standingOverlap(view, batchIds), "id", "gen")
 
   // ------------------------------------------------------------- _rowcount
 
@@ -259,15 +288,34 @@ object GraphMaintenance {
     else base
   }
 
+  // ----------------------------------------------------------------- view
+
+  /** The artifact view a GRAPH verb opens right after it takes the
+    * lease ([[Tombstones.View]]): the data, serving-edge and entry
+    * schemas (one inference job each), the `_ids` sidecar under its
+    * fixed schema, and the tombstone sidecar folded on the driver. Every
+    * step below reads through it.
+    */
+  def view(spark: SparkSession, p: String,
+           cap: Int = Tombstones.InlineCap): Tombstones.View =
+    Tombstones.View(spark, p, Seq("data", "serve/edges", "serve/entries"),
+      fixed = Map("_ids" -> IdsSchema), cap = cap)
+
+  /** True iff `df` has at least one row — one job, however sparse. */
+  private def nonEmpty(df: DataFrame): Boolean =
+    Tombstones.takeRows(df.select(lit(1)), 1).nonEmpty
+
   // ---------------------------------------------------------------- verbs
 
   /** Ingest a normalized batch (insert or upsert — the caller did its
     * verb-specific guards) under the marker protocol. Assumes the lease
     * is held and any PRIOR marker was already completed.
     */
-  def ingest(spark: SparkSession, p: String, batch: DataFrame,
+  def ingest(view: Tombstones.View, batch: DataFrame,
              q: GraphQuantizer, k: Int, metric: String,
              verb: String): Unit = {
+    val spark = view.spark
+    val p = view.base
     val g = Tombstones.nextGen(spark, p)
     writeMarker(spark, p, verb, g)
     // the point of no-loss: once this single atomic write commits, the
@@ -277,7 +325,10 @@ object GraphMaintenance {
     // batch's cluster partitions — the ONE quantizer touch of ingest.
     q.withCluster(batch.withColumn("gen", lit(g)), "vectors")
       .write.mode("append").partitionBy("cluster").parquet(dataPath(p))
-    complete(spark, p, q, k, metric)
+    // g came from nextGen under this lease, so nothing but the batch
+    // just written can carry it yet: the probes a resumed marker needs
+    // (did the batch, its _ids rows, its edges land?) are skipped
+    publish(view, q, k, metric, g, landed = Some(true))
   }
 
   /** Tombstone `ids` under the marker protocol: the delete advances the
@@ -285,125 +336,212 @@ object GraphMaintenance {
     * so its healing appends carry their own stamp and a crashed delete
     * is detectable like any other mutation.
     */
-  def remove(spark: SparkSession, p: String, ids: DataFrame,
+  def remove(view: Tombstones.View, ids: DataFrame,
              q: GraphQuantizer, k: Int, metric: String): Unit = {
-    val g = Tombstones.nextGen(spark, p)
-    writeMarker(spark, p, "delete", g)
-    Tombstones.appendUpto(spark, p, ids.select(col(ids.columns.head).cast("long")), g - 1)
-    complete(spark, p, q, k, metric)
+    val g = Tombstones.nextGen(view.spark, view.base)
+    writeMarker(view.spark, view.base, "delete", g)
+    view.appendUpto(ids, g - 1)
+    publish(view, q, k, metric, g, landed = Some(false))
   }
 
   /** Finish (or resume) the in-flight mutation — every step below is a
     * no-op when its effect already landed, so this is safe to call any
     * number of times, from the verb itself or from crash recovery.
     */
-  def complete(spark: SparkSession, p: String,
+  def complete(view: Tombstones.View,
                q: GraphQuantizer, k: Int, metric: String): Unit =
-    inflight(spark, p).foreach { m =>
-      val g = m.gen
-      val dataG = Tombstones.readWithGen(spark, dataPath(p))
-        .where(col("gen") === g)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val landed = dataG.limit(1).collect().nonEmpty
-        if (landed) {
-          val batchIds = dataG.select(col("id"))
-          // (a) probe sidecar — before any probe could consult it
-          if (idsPresent(spark, p)
-              && spark.read.parquet(idsPath(p)).where(col("gen") === g)
-                   .limit(1).collect().isEmpty)
-            appendIds(spark, p, batchIds, g)
-          // (b) serving edges for the batch (atomic job ⇒ any gen-g row
-          // means the step completed)
-          if (Tombstones.readWithGen(spark, edgesPath(p)).where(col("gen") === g)
-                .limit(1).collect().isEmpty)
-            appendServeEdges(spark, p, dataG, k, metric, g)
-          // (c) supersede the standing rows of the batch's ids — the
-          // PUBLISH step: until here both generations served (duplicate,
-          // never lost); from here exactly the latest serves. Probing
-          // gen < g keeps this recomputable and idempotent.
-          val changed = standingOverlap(spark, p, batchIds)
-            .where(col("gen") < g).select("id").distinct()
-          if (changed.limit(1).collect().nonEmpty)
-            Tombstones.appendUpto(spark, p, changed, g - 1)
-          // (d) growth-policy manifest
-          readRowCount(spark, p).foreach { case (n, asOf) =>
-            if (asOf < g) writeRowCount(spark, p, n + dataG.count(), g)
-          }
-        }
-      } finally dataG.unpersist()
-      // (e) + (f) routing heals — derived from the live view alone, so
-      // they need nothing from the lost batch context
-      if (healsEnabled(spark)) {
-        refreshEntries(spark, p, q, g)
-        relinkStarved(spark, p, k, metric, g)
-      }
-      // (g) live-entry manifest: the serve-time route auto-switch reads
-      // this instead of the build-time routeK² proxy, so an artifact
-      // that grows past the threshold under inserts flips the switch
-      // without a re-save. One narrow count of the K-bounded entries.
-      GraphAnn.writeEntryCount(spark, s"$p/serve",
-        Tombstones.filterGen(
-          Tombstones.readWithGen(spark, entriesPath(p)), p, "id", "gen").count())
-      clearMarker(spark, p)
-      if (Tombstones.maybeCompact(spark, p, compactTables(spark, p),
-            physicalRows(spark, p)))
-        afterCompact(spark, p, q, g)
-    }
-
-  /** Post-compaction fixups: the fold just changed the physical row set
-    * (refresh the growth-policy manifest from the narrow sidecar) and
-    * may have dropped dead medoid entries (re-seed their clusters so
-    * the routing invariant — every cluster with live rows has a live
-    * entry — holds without waiting for the next mutation).
-    */
-  def afterCompact(spark: SparkSession, p: String,
-                   q: GraphQuantizer, g: Long): Unit = {
-    writeRowCount(spark, p, standingIds(spark, p).count(), g)
-    refreshEntries(spark, p, q, g)
-    GraphAnn.writeEntryCount(spark, s"$p/serve",
-      Tombstones.filterGen(
-        Tombstones.readWithGen(spark, entriesPath(p)), p, "id", "gen").count())
-  }
+    inflight(view.spark, view.base).foreach(m =>
+      publish(view, q, k, metric, m.gen, landed = None))
 
   /** Resume an orphaned mutation if one is in flight (verb entry /
     * load-time recovery). Assumes the lease is held.
     */
-  def recoverIfInflight(spark: SparkSession, p: String,
+  def recoverIfInflight(view: Tombstones.View,
                         q: GraphQuantizer, k: Int, metric: String): Unit =
-    if (inflight(spark, p).isDefined) complete(spark, p, q, k, metric)
+    complete(view, q, k, metric)
+
+  /** Publish mutation `g`. `landed` says whether a data batch was
+    * written at `g`: Some(true) right after [[ingest]]'s own write,
+    * Some(false) for a delete, None when resuming a marker — then the
+    * batch read below doubles as the "did it land" probe, and the
+    * `_ids` and edge appends each probe for gen-`g` rows first (each is
+    * one atomic job, so any row means all rows).
+    */
+  private def publish(view: Tombstones.View, q: GraphQuantizer, k: Int, metric: String,
+                      g: Long, landed: Option[Boolean]): Unit = {
+    val spark = view.spark
+    val p = view.base
+    // the gen-g batch's (id, cluster) rows: its ids and touched
+    // clusters for every step below; None above the probe cap
+    val batch: Option[Array[(Long, Int)]] =
+      if (landed.contains(false)) Some(Array.empty)
+      else {
+        val dataG = view.read("data").where(col("gen") === g)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val rows = Tombstones.collectAtMost(
+              dataG.select(col("id"), col("cluster").cast("int")), ProbeIsinMax)
+            .map(_.map(r => (r.getLong(0), r.getInt(1))))
+          if (rows.forall(_.nonEmpty))
+            settle(view, dataG, rows, k, metric, g, resumed = landed.isEmpty)
+          rows
+        } finally dataG.unpersist()
+      }
+    // (e) + (f) routing heals, scoped to this batch: its victims (the
+    // sidecar rows at upto = g-1) and the clusters it landed in. Both
+    // are derivable from the live view alone, so a resumed marker
+    // needs nothing from the lost batch context
+    val touched = batch.map(_.map(_._2).distinct)
+    val entriesHit = entriesAffected(view, g, view.rawUpto(g - 1), touched)
+    if (healsEnabled(spark)) {
+      if (entriesHit) refreshEntries(view, q, g)
+      relinkStarved(view, k, metric, g)
+    }
+    // (g) live-entry manifest: the serve-time route auto-switch reads
+    // this instead of the build-time routeK² proxy, so an artifact
+    // that grows past the threshold under inserts flips the switch
+    // without a re-save. The count moves only when an entry died or
+    // the heal re-seeded one — exactly when entriesHit holds.
+    if (entriesHit || GraphAnn.readEntryCount(spark, s"$p/serve").isEmpty)
+      writeEntryCount(view)
+    clearMarker(spark, p)
+    if (Tombstones.maybeCompact(view, compactTables(spark, p), physicalRows(spark, p)))
+      // the fold changes no live row: with the heals on, the scoped heal
+      // above already re-seeded every cluster this batch could empty, so
+      // only the heal-less arm re-seeds here (as the fold always did)
+      afterCompact(view, q, g, reseed = !healsEnabled(spark))
+  }
+
+  /** Steps (a)-(d) for a landed gen-`g` batch (`dataG`, its (id,
+    * cluster) rows in `batch` when under the probe cap).
+    */
+  private def settle(view: Tombstones.View, dataG: DataFrame,
+                     batch: Option[Array[(Long, Int)]], k: Int, metric: String,
+                     g: Long, resumed: Boolean): Unit = {
+    val spark = view.spark
+    val p = view.base
+    val ids = batch.map(_.map(_._1))
+    val batchIds = dataG.select(col("id"))
+    // (a) probe sidecar — before any probe could consult it
+    if (idsPresent(spark, p)
+        && !(resumed && nonEmpty(view.read("_ids").where(col("gen") === g))))
+      ids match {
+        case Some(a) => appendIds(spark, p, a, g)
+        case None    => appendIds(spark, p, batchIds, g)
+      }
+    // (b) serving edges for the batch
+    if (!(resumed && nonEmpty(view.read("serve/edges").where(col("gen") === g))))
+      appendServeEdges(view, dataG, k, metric, g, batch)
+    // (c) supersede the standing rows of the batch's ids — the PUBLISH
+    // step: until here both generations served (duplicate, never
+    // lost); from here exactly the latest serves. Probing gen < g
+    // keeps this recomputable and idempotent.
+    ids match {
+      case Some(a) =>
+        val changed = standingIds(view).where(inIds(col("id"), a) && col("gen") < g)
+          .select(col("id")).collect().map(_.getLong(0)).distinct
+        if (changed.nonEmpty) view.appendUpto(changed, g - 1)
+      case None =>
+        val changed = standingOverlap(view, batchIds)
+          .where(col("gen") < g).select("id").distinct()
+        if (nonEmpty(changed)) view.appendUpto(changed, g - 1)
+    }
+    // (d) growth-policy manifest
+    readRowCount(spark, p).foreach { case (n, asOf) =>
+      if (asOf < g)
+        writeRowCount(spark, p, n + ids.map(_.length.toLong).getOrElse(dataG.count()), g)
+    }
+  }
+
+  /** Whether mutation `g` can have left a cluster with live rows but no
+    * live entry: a victim was a live entry before the batch's
+    * tombstones, or the batch landed in a cluster with no live entry.
+    * Every earlier verb kept that invariant, so no other cluster can
+    * need the heal. One pruned collect of the entries touching the
+    * victims or the touched clusters; true (heal everything, as before)
+    * when the fold or a set is over its cap.
+    */
+  private def entriesAffected(view: Tombstones.View, g: Long,
+                              victims: Option[Array[Long]],
+                              touched: Option[Array[Int]]): Boolean =
+    (view.inline, view.inlineBefore(g - 1), victims, touched) match {
+      case (Some(now), Some(before), Some(v), Some(t))
+          if v.length <= RelinkIsinMax && t.length <= RelinkIsinMax =>
+        (v.nonEmpty || t.nonEmpty) && {
+          val cluster = col("cluster").cast("int")
+          val hit = Seq(
+            if (v.nonEmpty) Some(inIds(col("id"), v)) else None,
+            if (t.nonEmpty) Some(cluster.isin(t.map(Int.box): _*)) else None).flatten
+            .reduce(_ || _)
+          val rows = view.read("serve/entries").where(hit)
+            .select(col("id"), cluster, col("gen")).collect()
+            .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+          def alive(m: Map[Long, Long], id: Long, gen: Long) = m.get(id).forall(gen > _)
+          val vs = v.toSet
+          val covered = rows.collect { case (id, c, gen) if alive(now, id, gen) => c }.toSet
+          rows.exists { case (id, _, gen) => vs(id) && alive(before, id, gen) } ||
+            t.exists(c => !covered(c))
+        }
+      case _ => true
+    }
+
+  /** Rewrite the `_entrycount` manifest from the live entries. */
+  private def writeEntryCount(view: Tombstones.View): Unit =
+    GraphAnn.writeEntryCount(view.spark, s"${view.base}/serve",
+      view.filterGen(view.read("serve/entries"), "id", "gen").count())
+
+  /** Post-compaction fixups: the fold just changed the physical row set
+    * (refresh the growth-policy manifest from the narrow sidecar) and
+    * may have dropped dead medoid entries (`reseed`: re-seed their
+    * clusters so the routing invariant — every cluster with live rows
+    * has a live entry — holds without waiting for the next mutation).
+    */
+  def afterCompact(view: Tombstones.View, q: GraphQuantizer, g: Long,
+                   reseed: Boolean = true): Unit = {
+    writeRowCount(view.spark, view.base, standingIds(view).count(), g)
+    if ((reseed && refreshEntries(view, q, g))
+        || GraphAnn.readEntryCount(view.spark, s"${view.base}/serve").isEmpty)
+      writeEntryCount(view)
+  }
 
   // ---------------------------------------------------------------- edges
+
+  /** [[appendServeEdges]] outside a verb (its own view). */
+  private[graft] def appendServeEdges(spark: SparkSession, p: String, dataG: DataFrame,
+                                      k: Int, metric: String, g: Long): Unit =
+    appendServeEdges(view(spark, p), dataG, k, metric, g, None)
 
   /** Build and append the serving edges for the gen-`g` data slice —
     * exactly the edges [[Knn.appendGraphEdges]] would have produced for
     * the batch BEFORE it joined the layout: candidates are the touched
     * clusters' LIVE standing rows at gen < `g`, minus the batch ids'
     * own superseded rows (the tombstone may not have landed yet — the
-    * anti-join makes the exclusion unconditional), plus the batch
-    * itself; edges symmetrize with destination vectors attached and
-    * append at gen `g`.
+    * exclusion makes it unconditional), plus the batch itself; edges
+    * symmetrize with destination vectors attached and append at gen
+    * `g`. `batch`: the slice's (id, cluster) rows when the caller
+    * already holds them.
     */
-  private[graft] def appendServeEdges(spark: SparkSession, p: String, dataG: DataFrame,
-                               k: Int, metric: String,
-                               g: Long): Unit = {
+  private def appendServeEdges(view: Tombstones.View, dataG: DataFrame,
+                               k: Int, metric: String, g: Long,
+                               batch: Option[Array[(Long, Int)]]): Unit = {
     // quantizer-AGNOSTIC: both sides read the `cluster` the data layout
     // PERSISTS (written by the frozen quantizer at their own ingest) —
     // re-deriving it here would need the quantizer and compute the
     // identical value
-    val batch = dataG.select(col("id"), col("vectors"),
+    val rows = dataG.select(col("id"), col("vectors"),
       col("cluster").cast("int").as("cluster"))
-    val touched = dataG.select(col("cluster").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val standing = Tombstones.filterGen(
-        Tombstones.readWithGen(spark, dataPath(p))
-          .where(col("cluster").isin(touched: _*)).where(col("gen") < g),
-        p, "id", "gen")
-      .join(batch.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
-    val cand = standing.unionByName(batch)
+    val touched = batch.map(_.map(_._2).distinct.toSeq).getOrElse(
+      dataG.select(col("cluster").cast("int")).distinct().collect().map(_.getInt(0)).toSeq)
+    val standing0 = view.filterGen(
+      view.read("data").where(col("cluster").isin(touched: _*)).where(col("gen") < g),
+      "id", "gen")
+    val standing = (batch match {
+      case Some(b) => standing0.where(!inIds(col("id"), b.map(_._1)))
+      case None    => standing0.join(rows.select(col("id")), Seq("id"), "left_anti")
+    }).select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
+    val cand = standing.unionByName(rows)
     val edges = Knn.clusteredGraphEdges(
-        batch.select(col("id").as("q_id"), col("vectors").as("q_vec"), col("cluster")),
+        rows.select(col("id").as("q_id"), col("vectors").as("q_vec"), col("cluster")),
         cand.select(col("id"), col("vectors").as("n_vec"), col("cluster")),
         k, metric)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -416,7 +554,7 @@ object GraphMaintenance {
         .select(col("src_id"), col("dst_id"), col("dst_vec"), lit(g).as("gen"))
         .write.mode("append")
         .option("parquet.block.size", EdgeBlockBytes.toString)
-        .parquet(edgesPath(p))
+        .parquet(edgesPath(view.base))
     } finally edges.unpersist()
   }
 
@@ -431,11 +569,12 @@ object GraphMaintenance {
     * missing one and appends it at gen `g`. Clusters with no live rows
     * stay entry-less (nothing to route to); the check itself is
     * K-bounded plus one partition-pruned scan of the affected clusters.
+    * True iff it appended an entry.
     */
-  def refreshEntries(spark: SparkSession, p: String,
-                     q: GraphQuantizer, g: Long): Unit = {
-    val liveEntries = Tombstones.filterGen(
-      Tombstones.readWithGen(spark, entriesPath(p)), p, "id", "gen")
+  def refreshEntries(view: Tombstones.View, q: GraphQuantizer, g: Long): Boolean = {
+    val spark = view.spark
+    val p = view.base
+    val liveEntries = view.filterGen(view.read("serve/entries"), "id", "gen")
     // clusters that HAVE a live entry, as a frame — never a driver
     // collect of the full cluster set (K-proportional at routed K)
     val haveDf = liveEntries.select(col("cluster").cast("int").as("cluster")).distinct()
@@ -450,9 +589,8 @@ object GraphMaintenance {
     // K-proportional driver list
     val missingSmall = missingCv.select(col("cluster"))
       .limit(RelinkIsinMax + 1).collect().map(_.getInt(0))
-    if (missingSmall.isEmpty) return
-    val live0 = Tombstones.filterGen(
-      Tombstones.readWithGen(spark, dataPath(p)), p, "id", "gen")
+    if (missingSmall.isEmpty) return false
+    val live0 = view.filterGen(view.read("data"), "id", "gen")
     val live =
       if (missingSmall.length <= RelinkIsinMax)
         live0.where(col("cluster").isin(missingSmall.map(Int.box): _*))
@@ -467,7 +605,8 @@ object GraphMaintenance {
       .select(col("cluster"), col("id"), col("vectors").as("vec"), lit(g).as("gen"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (medoids.limit(1).collect().nonEmpty) {
+      val appended = nonEmpty(medoids)
+      if (appended) {
         // route upkeep: a routed layout's re-seeded entry joins the route
         // table at append (assigned against the FROZEN route centroids,
         // like data rows against the frozen coarse quantizer) — without
@@ -484,6 +623,7 @@ object GraphMaintenance {
           else medoids
         stamped.write.mode("append").parquet(entriesPath(p))
       }
+      appended
     } finally medoids.unpersist()
   }
 
@@ -493,14 +633,6 @@ object GraphMaintenance {
     * distributed (semi-join, unpruned) path instead of failing.
     */
   private val RelinkIsinMax = 4096
-
-  /** Collect up to [[RelinkIsinMax]] longs; None = too many (fall back
-    * to the distributed path).
-    */
-  private def smallIds(df: DataFrame): Option[Array[Long]] = {
-    val got = df.limit(RelinkIsinMax + 1).collect().map(_.getLong(0))
-    if (got.length <= RelinkIsinMax) Some(got) else None
-  }
 
   private def inIds(c: org.apache.spark.sql.Column, ids: Array[Long]) =
     c.isin(ids.map(Long.box): _*)
@@ -518,87 +650,132 @@ object GraphMaintenance {
     * under the either-endpoint tombstone rule), so "nodes that pointed
     * at a victim" ≡ "out-neighbors of the victims" — which an
     * `src_id IN (victims)` predicate finds with parquet row-group
-    * pruning on the src-sorted edge files. Victims / affected / starved
-    * sets are batch-bounded by construction and ride the driver as IN
-    * lists (capped — an oversized batch degrades to semi-joins); the
-    * candidate scan is partition-pruned to the starved nodes' clusters.
+    * pruning on the src-sorted edge files. The victims come from the
+    * view's fold, and the affected and starved sets from two pruned
+    * collects with no exchange ([[starvedOnDriver]]); an oversized
+    * batch or sidecar degrades to semi-joins. The candidate scan is
+    * partition-pruned to the starved nodes' clusters.
     */
-  def relinkStarved(spark: SparkSession, p: String,
-                    k: Int, metric: String,
-                    g: Long): Unit = {
-    if (!Tombstones.present(spark, p)) return
-    // victims = THIS batch's tombstone appends, probed on the RAW
-    // sidecar rows (upto_gen = g-1): the max-folded tombs() view would
-    // hide an id that ALSO carries a legacy kill-forever row (upto =
-    // MaxValue folds over g-1) and silently skip its neighbors' heal
-    val victimsDf = Tombstones.rawUpto(spark, p, g - 1).select(col("id"))
-    val victims = smallIds(victimsDf)
-    if (victims.exists(_.isEmpty)) return
-    val edgesPhys = Tombstones.readWithGen(spark, edgesPath(p))
-    // out-neighbors of the victims ≡ their in-neighbors (symmetrized
-    // layout) — src-side probe, row-group pruned
-    val affectedDf = (victims match {
-      case Some(ids) => edgesPhys.where(inIds(col("src_id"), ids))
-      case None => edgesPhys.join(victimsDf.withColumnRenamed("id", "src_id"),
-        Seq("src_id"), "leftsemi")
-    }).select(col("dst_id").as("id")).distinct()
-    val affectedLiveDf = Tombstones.filterGen(
-      standingIds(spark, p).join(affectedDf, Seq("id"), "leftsemi"), p, "id", "gen")
-      .select("id").distinct()
-    val affected = smallIds(affectedLiveDf)
-    if (affected.exists(_.isEmpty)) return
-    val affectedEdges = (affected match {
-      case Some(ids) => edgesPhys.where(inIds(col("src_id"), ids))
-      case None => edgesPhys.join(affectedLiveDf.withColumnRenamed("id", "src_id"),
-        Seq("src_id"), "leftsemi")
-    })
-    val liveEdges = Tombstones.filterEdgesGen(affectedEdges, p, "src_id", "dst_id", "gen")
-      .select(col("src_id"), col("dst_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val deg = liveEdges.groupBy("src_id").agg(count(lit(1)).as("deg"))
-      val starvedDf = affectedLiveDf
-        .join(deg.withColumnRenamed("src_id", "id"), Seq("id"), "left_outer")
-        .where(coalesce(col("deg"), lit(0L)) < math.max(1, k / 2))
-        .select("id")
-      val starved = smallIds(starvedDf)
-      if (starved.exists(_.isEmpty)) return
-      val live = Tombstones.filterGen(
-        Tombstones.readWithGen(spark, dataPath(p)), p, "id", "gen")
-      val starvedRows = (starved match {
-        case Some(ids) => live.where(inIds(col("id"), ids))
-        case None => live.join(starvedDf, Seq("id"), "leftsemi")
-      }).select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val clusters = starvedRows.select("cluster").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (clusters.isEmpty) return
-        // quantizer-agnostic: both sides carry the PERSISTED cluster of
-        // the frozen quantizer (flat or routed) — no re-assignment
-        val cand = live.where(col("cluster").isin(clusters: _*))
-          .select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
-        val fresh = Knn.clusteredGraphEdges(
-            starvedRows.select(col("id").as("q_id"), col("vectors").as("q_vec"),
-              col("cluster")),
-            cand.select(col("id"), col("vectors").as("n_vec"), col("cluster")),
-            k, metric)
-          .select(col("q_id").as("src_id"), col("n_id").as("dst_id"))
-          .join(liveEdges, Seq("src_id", "dst_id"), "left_anti")
+  def relinkStarved(view: Tombstones.View, k: Int, metric: String, g: Long): Unit = {
+    if (!view.present) return
+    val floor = math.max(1, k / 2)
+    starvedOnDriver(view, floor, g) match {
+      case Some((starved, liveEdges)) =>
+        if (starved.nonEmpty) {
+          import view.spark.implicits._
+          relink(view, Right(starved), liveEdges.toSeq.toDF("src_id", "dst_id"), k, metric, g)
+        }
+      case None =>
+        // victims = THIS batch's tombstone appends, probed on the RAW
+        // sidecar rows (upto_gen = g-1): the max-folded tombs() view
+        // would hide an id that ALSO carries a legacy kill-forever row
+        // (upto = MaxValue folds over g-1) and skip its neighbors' heal
+        val victims = Tombstones.rawUpto(view.spark, view.base, g - 1)
+        val edgesPhys = view.read("serve/edges")
+        val affected = edgesPhys
+          .join(victims.withColumnRenamed("id", "src_id"), Seq("src_id"), "leftsemi")
+          .select(col("dst_id").as("id")).distinct()
+        val affectedLive = view.filterGen(
+          standingIds(view).join(affected, Seq("id"), "leftsemi"), "id", "gen")
+          .select("id").distinct()
+        val liveEdges = view.filterEdgesGen(
+            edgesPhys.join(affectedLive.withColumnRenamed("id", "src_id"),
+              Seq("src_id"), "leftsemi"),
+            "src_id", "dst_id", "gen")
+          .select(col("src_id"), col("dst_id"))
           .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          if (fresh.limit(1).collect().isEmpty) return
-          val sym = fresh.unionByName(
-            fresh.select(col("dst_id").as("src_id"), col("src_id").as("dst_id")))
-            .distinct()
-          sym.join(live.select(col("id").as("dst_id"), col("vectors").as("dst_vec")),
-              "dst_id")
-            .select(col("src_id"), col("dst_id"), col("dst_vec"), lit(g).as("gen"))
-            .write.mode("append")
-            .option("parquet.block.size", EdgeBlockBytes.toString)
-            .parquet(edgesPath(p))
-        } finally fresh.unpersist()
-      } finally starvedRows.unpersist()
-    } finally liveEdges.unpersist()
+          val deg = liveEdges.groupBy("src_id").agg(count(lit(1)).as("deg"))
+          val starved = affectedLive
+            .join(deg.withColumnRenamed("src_id", "id"), Seq("id"), "left_outer")
+            .where(coalesce(col("deg"), lit(0L)) < floor)
+            .select("id")
+          relink(view, Left(starved), liveEdges, k, metric, g)
+        } finally liveEdges.unpersist()
+    }
+  }
+
+  /** The starved set on the driver, from the view's fold: the victims'
+    * out-neighbors (collect 1: an `src_id IN (victims)` edge probe),
+    * then those neighbors' out-edges plus their standing (id, gen) rows
+    * (collect 2: one union of two IN-pruned scans). A node is live iff
+    * a standing row outlives its tombstone; its degree is its MULTISET
+    * count of live out-edges (both endpoints outlive the edge's
+    * generation). Returns the starved ids with their live out-edges,
+    * or None when the fold or a set is over its cap.
+    */
+  private def starvedOnDriver(view: Tombstones.View, floor: Int,
+                              g: Long): Option[(Array[Long], Array[(Long, Long)])] =
+    for {
+      m <- view.inline
+      victims <- view.rawUpto(g - 1) if victims.length <= RelinkIsinMax
+      edgesPhys = view.read("serve/edges")
+      affected = (if (victims.isEmpty) Array.empty[Long]
+        else edgesPhys.where(inIds(col("src_id"), victims)).select(col("dst_id"))
+          .collect().map(_.getLong(0)).distinct)
+      if affected.length <= RelinkIsinMax
+    } yield
+      if (affected.isEmpty) (Array.empty[Long], Array.empty[(Long, Long)])
+      else {
+        val rows = edgesPhys.where(inIds(col("src_id"), affected))
+          .select(col("src_id"), col("dst_id"), col("gen"))
+          .unionByName(standingIds(view).where(inIds(col("id"), affected))
+            .select(col("id").as("src_id"), lit(null).cast("long").as("dst_id"), col("gen")))
+          .collect()
+        def alive(id: Long, gen: Long) = m.get(id).forall(gen > _)
+        val liveNodes = rows.collect {
+          case r if r.isNullAt(1) && alive(r.getLong(0), r.getLong(2)) => r.getLong(0)
+        }.toSet
+        val liveEdges = rows.collect {
+          case r if !r.isNullAt(1) && alive(r.getLong(0), r.getLong(2))
+              && alive(r.getLong(1), r.getLong(2)) => (r.getLong(0), r.getLong(1))
+        }
+        val deg = liveEdges.groupBy(_._1).map { case (id, es) => id -> es.length }
+        val starved = affected.filter(id => liveNodes(id) && deg.getOrElse(id, 0) < floor)
+        val starvedSet = starved.toSet
+        (starved, liveEdges.filter(e => starvedSet(e._1)))
+      }
+
+  /** Recompute the starved nodes' top-k against their clusters' live
+    * rows and append the edges they do not already hold live (both
+    * directions, gen `g`). `starved`: driver ids, or a frame of ids.
+    */
+  private def relink(view: Tombstones.View, starved: Either[DataFrame, Array[Long]],
+                     liveEdges: DataFrame, k: Int, metric: String, g: Long): Unit = {
+    val live = view.filterGen(view.read("data"), "id", "gen")
+    val starvedRows = (starved match {
+      case Right(ids) => live.where(inIds(col("id"), ids))
+      case Left(df)   => live.join(df, Seq("id"), "leftsemi")
+    }).select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val clusters = starvedRows.select("cluster").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      if (clusters.isEmpty) return
+      // quantizer-agnostic: both sides carry the PERSISTED cluster of
+      // the frozen quantizer (flat or routed) — no re-assignment
+      val cand = live.where(col("cluster").isin(clusters: _*))
+        .select(col("id"), col("vectors"), col("cluster").cast("int").as("cluster"))
+      val fresh = Knn.clusteredGraphEdges(
+          starvedRows.select(col("id").as("q_id"), col("vectors").as("q_vec"),
+            col("cluster")),
+          cand.select(col("id"), col("vectors").as("n_vec"), col("cluster")),
+          k, metric)
+        .select(col("q_id").as("src_id"), col("n_id").as("dst_id"))
+        .join(liveEdges, Seq("src_id", "dst_id"), "left_anti")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        if (!nonEmpty(fresh)) return
+        val sym = fresh.unionByName(
+          fresh.select(col("dst_id").as("src_id"), col("src_id").as("dst_id")))
+          .distinct()
+        sym.join(live.select(col("id").as("dst_id"), col("vectors").as("dst_vec")),
+            "dst_id")
+          .select(col("src_id"), col("dst_id"), col("dst_vec"), lit(g).as("gen"))
+          .write.mode("append")
+          .option("parquet.block.size", EdgeBlockBytes.toString)
+          .parquet(edgesPath(view.base))
+      } finally fresh.unpersist()
+    } finally starvedRows.unpersist()
   }
 }

@@ -1,8 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Delete lifecycle for the persisted artifacts (reference:
   * faiss_index.rs:131 remove_vectors, vector_database.rs:32-38): every
@@ -23,9 +27,18 @@ import org.apache.spark.sql.functions._
   *    [[Retrieval.compactPostings]] discipline) and clears the sidecar,
   *    so post-compaction plans carry no anti-join at all.
   *
-  * The sidecar schema is one LONG column `id` regardless of the
-  * artifact's own id column name; filters name the artifact column
-  * explicitly (a graph artifact filters BOTH endpoint columns).
+  * The sidecar rows are `(id LONG, upto_gen LONG)` regardless of the
+  * artifact's own id column name: `upto_gen` is the highest generation
+  * the row kills, null on rows a plain [[append]] wrote (kill every
+  * generation). Every reader goes through ONE fixed read schema
+  * ([[sidecar]]), so no sidecar read pays a schema-inference job; filters
+  * name the artifact column explicitly (a graph artifact filters BOTH
+  * endpoint columns).
+  *
+  * A mutation verb reads the sidecar ONCE under its lease: a [[View]]
+  * collects the raw rows, folds them on the driver and keeps the fold
+  * current across the verb's own appends, so every filter inside the
+  * verb is a literal map lookup instead of a per-action sidecar join.
   */
 object Tombstones {
 
@@ -40,9 +53,23 @@ object Tombstones {
   def present(spark: SparkSession, base: String): Boolean =
     fsOf(spark, base).exists(new Path(s"$base/$subdir"))
 
+  /** The one read schema of every sidecar file: [[append]] writes `id`
+    * alone, [[appendUpto]] adds `upto_gen`; a file without the column
+    * reads it as null.
+    */
+  private val sidecarSchema = StructType(Seq(
+    StructField("id", LongType), StructField("upto_gen", LongType)))
+
+  /** The raw sidecar rows as (id, upto): a null `upto_gen` (a plain
+    * [[append]] row) reads as Long.MaxValue, kill every generation.
+    */
+  private def sidecar(spark: SparkSession, base: String): DataFrame =
+    spark.read.schema(sidecarSchema).parquet(s"$base/$subdir")
+      .select(col("id"), coalesce(col("upto_gen"), lit(Long.MaxValue)).as("upto"))
+
   /** Tombstone ids as a 1-column (`id` LONG) frame. */
   def ids(spark: SparkSession, base: String): DataFrame =
-    spark.read.parquet(s"$base/$subdir").select(col("id").cast("long").as("id"))
+    sidecar(spark, base).select(col("id"))
 
   /** Append deletions: `idsDf`'s FIRST column (cast long) are the ids to
     * tombstone. Idempotent at read time (the anti-join dedups); appends
@@ -72,18 +99,9 @@ object Tombstones {
   /** The sidecar folded to (id, upto): the highest generation each dead
     * id's tombstones cover (multiple tombstones for one id compose as
     * their max — a row dies if ANY tombstone covers its generation).
-    * mergeSchema because plain [[append]] files lack the `upto_gen`
-    * column; those rows coalesce to Long.MaxValue.
     */
-  def tombs(spark: SparkSession, base: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(s"$base/$subdir")
-    val upto =
-      if (raw.columns.contains("upto_gen"))
-        coalesce(col("upto_gen").cast("long"), lit(Long.MaxValue))
-      else lit(Long.MaxValue)
-    raw.select(col("id").cast("long").as("id"), upto.as("upto"))
-      .groupBy("id").agg(max("upto").as("upto"))
-  }
+  def tombs(spark: SparkSession, base: String): DataFrame =
+    sidecar(spark, base).groupBy("id").agg(max("upto").as("upto"))
 
   /** The DISTINCT ids whose RAW sidecar rows carry exactly
     * `upto_gen = upto` — one mutation batch's own tombstone appends.
@@ -92,14 +110,8 @@ object Tombstones {
     * generation-scoped stamp there, which would hide it from callers
     * probing for a specific batch (the re-link heal's victim set).
     */
-  def rawUpto(spark: SparkSession, base: String, upto: Long): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(s"$base/$subdir")
-    if (!raw.columns.contains("upto_gen"))
-      raw.select(col("id").cast("long").as("id")).limit(0)
-    else
-      raw.where(coalesce(col("upto_gen").cast("long"), lit(Long.MaxValue)) === upto)
-        .select(col("id").cast("long").as("id")).distinct()
-  }
+  def rawUpto(spark: SparkSession, base: String, upto: Long): DataFrame =
+    sidecar(spark, base).where(col("upto") === upto).select(col("id")).distinct()
 
   /** The sidecar's PUBLISHED view, folded to (id, upto): the raw rows
     * are gated by the publish rule — effective iff legacy kill-forever
@@ -112,16 +124,10 @@ object Tombstones {
     * concurrent reader mid-mutation would see the previously-superseded
     * rows resurrect (duplicate doclen rows, corrupted N/avgdl/df).
     */
-  def tombsPublished(spark: SparkSession, base: String, publishedGen: Long): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(s"$base/$subdir")
-    val upto =
-      if (raw.columns.contains("upto_gen"))
-        coalesce(col("upto_gen").cast("long"), lit(Long.MaxValue))
-      else lit(Long.MaxValue)
-    raw.select(col("id").cast("long").as("id"), upto.as("upto"))
+  def tombsPublished(spark: SparkSession, base: String, publishedGen: Long): DataFrame =
+    sidecar(spark, base)
       .where(col("upto") === Long.MaxValue || col("upto") < publishedGen)
       .groupBy("id").agg(max("upto").as("upto"))
-  }
 
   /** [[filterGen]] restricted to PUBLISHED tombstones: a tombstone row
     * takes effect only once the artifact's published generation has
@@ -149,29 +155,62 @@ object Tombstones {
         .drop("_tomb_id", "_tomb_upto")
     }
 
+  /** Default cap on the raw sidecar rows a driver-side fold collects
+    * ([[inlineTombs]], [[View]]); above it the broadcast-join filters
+    * stay (the ~20% growth policy bounds the sidecar, so the join path
+    * remains the at-scale story and its measured envelope).
+    */
+  val InlineCap = 4096
+
+  /** Up to `n` rows of `df` in ONE job. A `limit(n).collect()` over a
+    * multi-file scan runs Spark's incremental take — one job per
+    * scale-up round while the first partitions come back short, which a
+    * sparse result always does; a per-partition take finishes in one
+    * pass. Local relations (driver literals) collect with no job.
+    */
+  private[graft] def takeRows(df: DataFrame, n: Int): Array[Row] =
+    if (df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]) df.limit(n).collect()
+    else df.rdd.mapPartitions(_.take(n)).collect().take(n)
+
+  /** All rows of `df` when it has at most `n`, else None — one job. */
+  private[graft] def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
+    val got = takeRows(df, n + 1)
+    if (got.length > n) None else Some(got)
+  }
+
+  /** The raw sidecar rows as (id, upto) pairs, unfolded — None when
+    * there are more than `cap`. One job.
+    */
+  private def rawRows(spark: SparkSession, base: String, cap: Int): Option[Array[(Long, Long)]] =
+    collectAtMost(sidecar(spark, base), cap).map(_.map(r => r.getLong(0) -> r.getLong(1)))
+
+  /** Raw (id, upto) rows folded to the highest upto per id — [[tombs]]
+    * on the driver.
+    */
+  private def fold(rows: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val m = scala.collection.mutable.HashMap.empty[Long, Long]
+    rows.foreach { case (id, u) => if (m.get(id).forall(_ < u)) m(id) = u }
+    m.toMap
+  }
+
   /** Construction-time LITERAL snapshot of the folded sidecar, for
     * serve frames that are REBUILT per call (the facade's per-search
-    * serving frames): when the folded sidecar is bounded (≤ `cap`
-    * rows), the per-ACTION sidecar scan + fold + broadcast build that
-    * the join filters pay on every action of a driver-driven walk
-    * (hops + 1 driving collects plus the final cut each re-ran them)
-    * collapses into ONE collect here, and the keep rule becomes a pure
-    * codegen map-literal lookup. Returns Some(map) to splice, None when
-    * the fold exceeds `cap` — callers then keep the broadcast-join
-    * filters (the ~20% growth policy bounds the sidecar, so the join
-    * path remains the at-scale story and its measured envelope).
-    * Snapshot semantics match the join filters' for per-call frames:
-    * both read the sidecar inside the serving call; they differ only
-    * under a concurrent mutation mid-call, a regime the single-writer
-    * lease already scopes to transient-but-safe reads.
+    * serving frames): when the sidecar is bounded (≤ `cap` raw rows),
+    * the per-ACTION sidecar scan + fold + broadcast build that the join
+    * filters pay on every action of a driver-driven walk (hops + 1
+    * driving collects plus the final cut each re-ran them) collapses
+    * into ONE collect here — the raw rows, folded on the driver, so no
+    * shuffle either — and the keep rule becomes a pure codegen
+    * map-literal lookup. Returns Some(map) to splice, None when the
+    * sidecar exceeds `cap` — callers then keep the broadcast-join
+    * filters. Snapshot semantics match the join filters' for per-call
+    * frames: both read the sidecar inside the serving call; they differ
+    * only under a concurrent mutation mid-call, a regime the
+    * single-writer lease already scopes to transient-but-safe reads.
     */
-  def inlineTombs(spark: SparkSession, base: String, cap: Int = 4096): Option[Map[Long, Long]] =
+  def inlineTombs(spark: SparkSession, base: String, cap: Int = InlineCap): Option[Map[Long, Long]] =
     if (!present(spark, base)) Some(Map.empty)
-    else {
-      val rows = tombs(spark, base).limit(cap + 1).collect()
-      if (rows.length > cap) None
-      else Some(rows.iterator.map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    }
+    else rawRows(spark, base, cap).map(r => fold(r))
 
   /** [[filterGen]]'s keep rule over an [[inlineTombs]] snapshot — a
     * literal map lookup instead of the sidecar join; an empty map is
@@ -182,7 +221,7 @@ object Tombstones {
                       m: Map[Long, Long]): DataFrame =
     if (m.isEmpty) df
     else {
-      val u = element_at(typedLit(m), col(idCol))
+      val u = element_at(typedLit(m), col(idCol).cast("long"))
       df.where(u.isNull || col(genCol) > u)
     }
 
@@ -194,10 +233,29 @@ object Tombstones {
                            m: Map[Long, Long]): DataFrame =
     if (m.isEmpty) df
     else {
-      val ua = element_at(typedLit(m), col(aCol))
-      val ub = element_at(typedLit(m), col(bCol))
+      val ua = element_at(typedLit(m), col(aCol).cast("long"))
+      val ub = element_at(typedLit(m), col(bCol).cast("long"))
       df.where((ua.isNull || col(genCol) > ua) && (ub.isNull || col(genCol) > ub))
     }
+
+  /** A generation-stamped table's merged schema with `gen` forced
+    * present — the one schema-inference job a [[readWithGen]] costs,
+    * which callers that read a table repeatedly ([[View]], the
+    * facade's serve frames) pay once and replay through [[readGen]].
+    */
+  def genSchema(spark: SparkSession, path: String): StructType = {
+    val s = spark.read.option("mergeSchema", "true").parquet(path).schema
+    if (s.fieldNames.contains("gen")) s else s.add("gen", LongType)
+  }
+
+  /** [[readWithGen]] under a recorded [[genSchema]]: the same rows and
+    * columns in the same order (a `gen` the files lack reads as null and
+    * coalesces to 0), with no schema-inference job.
+    */
+  def readGen(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+      .withColumn("gen", coalesce(col("gen").cast("long"), lit(0L)))
+      .select(schema.fieldNames.map(col): _*)
 
   /** Read a generation-stamped table: mergeSchema (files written before
     * the table gained its `gen` column coexist with stamped appends)
@@ -328,7 +386,7 @@ object Tombstones {
     */
   def rowCount(spark: SparkSession, base: String): Long =
     if (!present(spark, base)) 0L
-    else spark.read.parquet(s"$base/$subdir").select("id").distinct().count()
+    else ids(spark, base).distinct().count()
 
   /** Default growth-policy threshold: auto-compact once the sidecar
     * exceeds 20% of the primary table's physical rows. Why 0.2: until
@@ -384,13 +442,18 @@ object Tombstones {
     * a footer count and only runs when a sidecar exists.
     */
   def maybeCompact(spark: SparkSession, base: String, tables: Seq[TombTable],
-                   primaryRows: => Long): Boolean = {
-    if (!present(spark, base)) return false
-    recordPolicy(spark, base)
-    val ratio = policyRatio(spark, base)
-    val side = rowCount(spark, base)
-    if (side > ratio * math.max(primaryRows, 1L)) {
-      compact(spark, base, tables)
+                   primaryRows: => Long): Boolean =
+    present(spark, base) && maybeCompact(View(spark, base), tables, primaryRows)
+
+  /** [[maybeCompact]] inside a verb that holds a [[View]]: the distinct
+    * dead-id count comes from the view's driver fold.
+    */
+  def maybeCompact(view: View, tables: Seq[TombTable], primaryRows: => Long): Boolean = {
+    if (!view.present) return false
+    recordPolicy(view.spark, view.base)
+    val ratio = policyRatio(view.spark, view.base)
+    if (view.rowCount > ratio * math.max(primaryRows, 1L)) {
+      compact(view, tables)
       true
     } else false
   }
@@ -452,8 +515,19 @@ object Tombstones {
     * artifact stays committed — and derived-staleness markers keep
     * firing — across the swap. Single-writer, like every compactor.
     */
-  def compact(spark: SparkSession, base: String, tables: Seq[TombTable]): Unit = {
-    if (!present(spark, base)) return
+  def compact(spark: SparkSession, base: String, tables: Seq[TombTable]): Unit =
+    if (present(spark, base)) compact(View(spark, base), tables)
+
+  /** [[compact]] inside a verb that holds a [[View]]: the tables read
+    * under the view's schemas and the keep rule is the view's filter —
+    * the driver-fold literal when the sidecar is under the inline cap —
+    * so the fold scans each table once with no sidecar join; the view's
+    * fold is cleared with the sidecar.
+    */
+  def compact(view: View, tables: Seq[TombTable]): Unit = {
+    if (!view.present) return
+    val spark = view.spark
+    val base = view.base
     val t = ids(spark, base)
     tables.foreach { spec =>
       val dir = if (spec.rel.isEmpty) base else s"$base/${spec.rel}"
@@ -468,12 +542,8 @@ object Tombstones {
       // files predate the column comes out schema-uniform.
       val kept = spec.genCol match {
         case Some(g) =>
-          val tg = tombs(spark, base)
-          spec.filterCols.foldLeft(readWithGen(spark, dir)) { (df, c) =>
-            val tt = tg.select(col("id").as(s"_t_$c"), col("upto").as(s"_u_$c"))
-            df.join(broadcast(tt), df(c) === col(s"_t_$c"), "left_outer")
-              .where(col(s"_u_$c").isNull || df(g) > col(s"_u_$c"))
-              .drop(s"_t_$c", s"_u_$c")
+          spec.filterCols.foldLeft(view.read(spec.rel)) { (df, c) =>
+            view.filterGen(df, c, g)
           }
             // the fold establishes a new GENERATION-0 BASELINE (exactly
             // like a fresh build, whose files read as gen 0): after it
@@ -518,7 +588,141 @@ object Tombstones {
       // listing so the next read of the table sees the fresh copy
       spark.catalog.refreshByPath(dir)
     }
-    clear(spark, base)
+    view.clear()
+  }
+
+  /** One mutation verb's snapshot of an artifact, taken once under the
+    * single-writer lease and passed explicitly through the verb: while
+    * the lease is held nothing but this verb changes the artifact, so
+    * everything the verb would otherwise re-read per action is read
+    * here once.
+    *
+    *  - `schemas`: each layout table's [[genSchema]] (one inference job
+    *    per table); [[read]] replays it ([[readGen]]), so the verb's
+    *    reads return what [[readWithGen]] would with no
+    *    schema-inference job. Tables not registered fall back to
+    *    readWithGen.
+    *  - the raw sidecar rows, collected once (≤ [[InlineCap]]) and
+    *    folded on the driver: the verb's filters become the
+    *    [[filterGenInline]] literals, and the dead-id count, a batch's
+    *    own tombstones ([[rawUpto]]) and the kill-all ids are driver
+    *    lookups. Over the cap the fold is None and every answer falls
+    *    back to today's sidecar reads and broadcast-join filters. The
+    *    verb's own [[appendUpto]] / [[clear]] keep the fold current.
+    */
+  final class View private (val spark: SparkSession, val base: String,
+                            schemas: Map[String, StructType],
+                            private var live: Boolean,
+                            private var raw: Option[ArrayBuffer[(Long, Long)]],
+                            cap: Int) {
+
+    private var folded: Option[Map[Long, Long]] = None
+
+    private def path(rel: String) = if (rel.isEmpty) base else s"$base/$rel"
+
+    /** The table's merged schema with `gen` forced in, when registered. */
+    def schema(rel: String): Option[StructType] = schemas.get(rel)
+
+    /** [[readWithGen]] of a table under the recorded schema. */
+    def read(rel: String): DataFrame = schemas.get(rel) match {
+      case Some(s) => readGen(spark, path(rel), s)
+      case None    => readWithGen(spark, path(rel))
+    }
+
+    /** True iff the artifact has live tombstones. */
+    def present: Boolean = live
+
+    /** The folded sidecar (id → highest upto), or None over the cap. */
+    def inline: Option[Map[Long, Long]] =
+      if (!live) Some(Map.empty)
+      else raw.map { r =>
+        if (folded.isEmpty) folded = Some(fold(r))
+        folded.get
+      }
+
+    /** The fold without the rows a given batch appended at `upto` —
+      * the sidecar as it stood before that batch's tombstones.
+      */
+    def inlineBefore(upto: Long): Option[Map[Long, Long]] =
+      if (!live) Some(Map.empty) else raw.map(r => fold(r.filter(_._2 != upto)))
+
+    /** [[filterGen]] under the view: the literal fold, else the join. */
+    def filterGen(df: DataFrame, idCol: String, genCol: String): DataFrame = inline match {
+      case Some(m) => filterGenInline(df, idCol, genCol, m)
+      case None    => Tombstones.filterGen(df, base, idCol, genCol)
+    }
+
+    /** [[filterEdgesGen]] under the view: the literal fold, else the join. */
+    def filterEdgesGen(df: DataFrame, aCol: String, bCol: String, genCol: String): DataFrame =
+      inline match {
+        case Some(m) => filterEdgesGenInline(df, aCol, bCol, genCol, m)
+        case None    => Tombstones.filterEdgesGen(df, base, aCol, bCol, genCol)
+      }
+
+    /** DISTINCT dead ids ([[Tombstones.rowCount]]). */
+    def rowCount: Long = inline match {
+      case Some(m) => m.size.toLong
+      case None    => Tombstones.rowCount(spark, base)
+    }
+
+    /** The distinct ids of the raw rows at exactly `upto`
+      * ([[Tombstones.rawUpto]]); None over the cap.
+      */
+    def rawUpto(upto: Long): Option[Array[Long]] =
+      if (!live) Some(Array.empty)
+      else raw.map(_.iterator.collect { case (id, u) if u == upto => id }.toArray.distinct)
+
+    /** Append generation-scoped tombstones for driver-held ids as one
+      * sidecar file ([[Tombstones.appendUpto]]) and fold them in.
+      */
+    def appendUpto(ids: Array[Long], upto: Long): Unit = {
+      import spark.implicits._
+      Tombstones.appendUpto(spark, base, ids.toSeq.toDF("id").coalesce(1), upto)
+      live = true
+      folded = None
+      raw.foreach(_ ++= ids.iterator.map(_ -> upto))
+      if (raw.exists(_.length > cap)) raw = None
+    }
+
+    /** [[appendUpto]] for ids in a frame (first column): collected when
+      * they fit the cap, else appended as a frame and the fold dropped.
+      */
+    def appendUpto(idsDf: DataFrame, upto: Long): Unit =
+      collectAtMost(idsDf.select(col(idsDf.columns.head).cast("long")), cap) match {
+        case Some(rows) => appendUpto(rows.map(_.getLong(0)), upto)
+        case None =>
+          Tombstones.appendUpto(spark, base, idsDf, upto)
+          live = true
+          folded = None
+          raw = None
+      }
+
+    /** Drop the sidecar ([[Tombstones.clear]]) and the fold with it. */
+    def clear(): Unit = {
+      Tombstones.clear(spark, base)
+      live = false
+      folded = None
+      raw = Some(ArrayBuffer.empty)
+    }
+  }
+
+  object View {
+    /** Open a view of `base`: the [[genSchema]] of each existing table in
+      * `genTables` (relative to `base`), `fixed` schemas registered as
+      * given, and the sidecar rows collected and folded — at most one job
+      * per inferred table plus one for the sidecar.
+      */
+    def apply(spark: SparkSession, base: String, genTables: Seq[String] = Nil,
+              fixed: Map[String, StructType] = Map.empty, cap: Int = InlineCap): View = {
+      val fs = fsOf(spark, base)
+      val inferred = genTables.filter(rel => fs.exists(new Path(s"$base/$rel")))
+        .map(rel => rel -> genSchema(spark, s"$base/$rel")).toMap
+      val live = present(spark, base)
+      val raw =
+        if (!live) Some(ArrayBuffer.empty[(Long, Long)])
+        else rawRows(spark, base, cap).map(r => ArrayBuffer(r.toSeq: _*))
+      new View(spark, base, fixed ++ inferred, live, raw, cap)
+    }
   }
 
   /** Recover an interrupted [[compact]] of one table dir — same

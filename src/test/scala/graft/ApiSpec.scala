@@ -1378,4 +1378,158 @@ class ApiSpec extends SparkSpec {
     val live = liveIds()
     hits.foreach(h => assert(live.contains(h.getLong(1)), "served id must be live"))
   }
+
+  /** The live rows of one maintained-GRAPH layout table (the read
+    * filter's view, through the sidecar join), as a set.
+    */
+  private def liveRows(dir: String, rel: String): Set[Seq[Any]] = {
+    import graft.operators.Tombstones
+    val raw = Tombstones.readWithGen(spark, s"$dir/$rel")
+    val live =
+      if (rel == "serve/edges") Tombstones.filterEdgesGen(raw, dir, "src_id", "dst_id", "gen")
+      else Tombstones.filterGen(raw, dir, "id", "gen")
+    live.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case v => v
+    }).toSet
+  }
+
+  test("artifact view: the inline-fold and broadcast-join forks maintain identical layouts and answers") {
+    val s = spark; import s.implicits._
+    val (dirA, rows, _) = crashFixture("fork")
+    val dirB = java.nio.file.Files.createTempDirectory("graft-crash-fork-join").toString
+    val fs = new org.apache.hadoop.fs.Path(dirA).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(dirB), true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dirA), fs,
+      new org.apache.hadoop.fs.Path(dirB), false, spark.sparkContext.hadoopConfiguration)
+    var a = VectorIndex.load(spark, dirA)
+    // cap 0: the view never folds the sidecar, every filter is the join
+    var b = VectorIndex.load(spark, dirB).withInlineCap(0)
+    val fresh = rows(4)._2.map(_ + 0.5f)
+    val steps: Seq[(String, VectorIndex => VectorIndex)] = Seq(
+      "upsert" -> (_.upsert(3L, rows(3)._2.map(_ + 6f))),
+      "delete" -> (_.delete(8L)),
+      "insert" -> (_.insert(1000L, fresh)),
+      "re-upsert of the deleted id" -> (_.upsert(8L, rows(8)._2.map(_ - 6f))),
+      "compact" -> (_.compact()))
+    val queries = Seq(rows(3)._2, rows(8)._2, fresh, rows(20)._2)
+    steps.foreach { case (name, step) =>
+      a = step(a)
+      b = step(b)
+      for (rel <- Seq("data", "serve/edges", "serve/entries"))
+        assert(liveRows(dirA, rel) === liveRows(dirB, rel), s"after $name: live $rel rows differ")
+      queries.foreach { q =>
+        assert(a.search(q, 5).collect().toSeq === b.search(q, 5).collect().toSeq,
+          s"after $name: search answers differ")
+      }
+    }
+    assert(a.count === 61L && b.count === 61L)
+    assert(!graft.operators.Tombstones.present(spark, dirB), "compact must clear the sidecar")
+  }
+
+  test("crash-injection: an upsert on a handle opened before the crash resumes windows 1-3 through verb-entry recovery") {
+    import graft.operators.{GraphMaintenance, IvfIndex, Tombstones}
+    import org.apache.spark.sql.functions._
+    val s = spark; import s.implicits._
+    val victim = 7L
+    for (w <- 1 to 3) {
+      val (dir, rows, cents) = crashFixture(s"entry$w")
+      // the writer's handle predates the crash: its next verb, not a
+      // load(), finds and settles the marker
+      val writer = VectorIndex.load(spark, dir)
+      val pre = rows(victim.toInt)._2
+      val moved = pre.map(_ + 9f)
+      val g = Tombstones.nextGen(spark, dir)
+      GraphMaintenance.writeMarker(spark, dir, "upsert", g)
+      if (w >= 2) IvfIndex.appendPartitioned(
+        Seq((victim, moved.toSeq, null: String)).toDF("id", "vectors", "data")
+          .select(col("id").cast("long"), col("vectors").cast("array<float>"),
+            col("data").cast("string")).withColumn("gen", lit(g)),
+        "vectors", cents, s"$dir/data")
+      if (w >= 3) GraphMaintenance.appendServeEdges(spark, dir,
+        Tombstones.readWithGen(spark, s"$dir/data").where(col("gen") === g),
+        4, "l2", g)
+
+      val latest = pre.map(_ - 9f)
+      val after = writer.upsert(victim, latest)
+      assert(GraphMaintenance.inflight(spark, dir).isEmpty,
+        s"window $w: the verb must settle the marker it found")
+      // every resumed step ran exactly once: the gen-g edges and _ids
+      // rows exist once (never re-appended by the resume), and only
+      // when the batch landed
+      val edgesG = Tombstones.readWithGen(spark, s"$dir/serve/edges")
+        .where(col("gen") === g).select("src_id", "dst_id").collect().toSeq
+      assert(edgesG.distinct.size === edgesG.size, s"window $w: gen-$g edges appended twice")
+      assert(edgesG.nonEmpty === (w >= 2), s"window $w: gen-$g edges ${edgesG.size}")
+      val idsG = spark.read.parquet(s"$dir/_ids").where(col("gen") === g).collect()
+      assert(idsG.length === (if (w >= 2) 1 else 0), s"window $w: gen-$g _ids rows ${idsG.length}")
+      // the id serves only its latest vector
+      val got = after.query(victim).collect()
+      assert(got.length === 1, s"window $w: id must serve exactly one row")
+      assert(got.head.getSeq[Float](1) === latest.toSeq, s"window $w: id must serve its latest vector")
+      assert(after.count === 60L, s"window $w: cardinality must be stable")
+      val hit = after.search(latest, 3).collect()
+      assert(hit.exists(r => r.getLong(1) == victim && math.abs(r.getDouble(2)) < 1e-3),
+        s"window $w: the latest vector must be reachable at distance 0")
+      for (old <- Seq(pre, moved))
+        assert(!after.search(old, 3).collect().exists(r =>
+            r.getLong(1) == victim && math.abs(r.getDouble(2)) < 1e-3),
+          s"window $w: a superseded vector must never be served")
+    }
+  }
+
+  /** Spark jobs run under `group`, counted by a listener the way
+    * ScaleSpec's GroupMetrics attributes work to a job group.
+    */
+  private def jobsOf(group: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (group == js.properties.getProperty("spark.jobGroup.id")) n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      // the listener bus is async: poll until the count settles
+      var prev = -1
+      var settled = 0
+      var waited = 0
+      while (settled < 2 && waited < 50) {
+        Thread.sleep(100); waited += 1
+        val cur = n.get
+        if (cur == prev) settled += 1 else { settled = 0; prev = cur }
+      }
+      n.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("job budget: one GRAPH upsert, delete, insert and search stay within their Spark-job budgets") {
+    val (dir, rows, _) = crashFixture("budget")
+    var idx = VectorIndex.load(spark, dir)
+    idx.search(rows(1)._2, 5).collect() // the serve schemas are recorded here
+    // each verb reads the sidecar and the layout schemas once under its
+    // lease; a change that brings back per-action sidecar folds, schema
+    // merges or recovery probes on the fresh path overruns these
+    val budgets = Seq[(String, Int, () => Unit)](
+      ("upsert", UpsertJobs, () => idx = idx.upsert(5L, rows(5)._2.map(_ + 3f))),
+      ("search after a mutation", SearchJobs, () => idx.search(rows(2)._2, 5).collect()),
+      ("delete", DeleteJobs, () => idx = idx.delete(11L)),
+      ("insert", InsertJobs, () => idx = idx.insert(500L, rows(12)._2.map(_ + 0.25f))))
+    budgets.foreach { case (verb, budget, body) =>
+      val jobs = jobsOf(s"budget-$verb")(body())
+      info(s"$verb: $jobs jobs (budget $budget)")
+      assert(jobs <= budget, s"$verb ran $jobs Spark jobs, over its budget of $budget")
+    }
+  }
+
+  // measured on the crash fixture (local[8], 4 shuffle partitions): 18 /
+  // 8 / 17 jobs per upsert / delete / insert, plus one of slack for an
+  // AQE stage split; a search after a mutation runs hops + 1 walk
+  // collects, its final action and the one sidecar collect
+  private val UpsertJobs = 19
+  private val DeleteJobs = 9
+  private val InsertJobs = 18
+  private val SearchJobs = 6
 }
