@@ -597,7 +597,7 @@ object Queries {
   private[graft] def mutatedGraphPath(spark: SparkSession, dir: String): String =
     operators.Artifacts.resolve(spark, "vindex_mut",
       operators.Artifacts.corpusKey(dir),
-      operators.Artifacts.fingerprint(spark, Seq(dir), spec = "v1 graph verbs i/u/d")) { tmp =>
+      operators.Artifacts.fingerprint(spark, Seq(dir), spec = "v2 graph verbs i/u/d")) { tmp =>
       import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
       api.VectorIndex.create(spark, api.IndexType.GRAPH, 64, api.Metric.L2)
@@ -1443,7 +1443,7 @@ object Queries {
     val centroids = operators.IvfIndex.fitCached(emb, "embedding", k = 16)
     val books = operators.PqIndex.fitCached(emb, "embedding", dim = 64, m = 8, ksub = 16)
     val deleted = Seq(0L, 59L)
-    val fp = operators.Artifacts.fingerprint(spark, Seq(dir))
+    val fp = operators.Artifacts.fingerprint(spark, Seq(dir), spec = "v2 upto_gen tombstones")
     val ivfPath = operators.Artifacts.resolve(spark, "ivf_del",
       operators.Artifacts.corpusKey(dir), fp) { tmp =>
       operators.IvfIndex.writePartitioned(emb, "embedding", centroids, tmp)
@@ -1659,7 +1659,7 @@ object Queries {
   private[graft] def mutatedTextPath(spark: SparkSession, dir: String): String =
     operators.Artifacts.resolve(spark, "tindex_mut",
       operators.Artifacts.corpusKey(dir),
-      operators.Artifacts.fingerprint(spark, Seq(dir), spec = "v1 text verbs a/u/d")) { tmp =>
+      operators.Artifacts.fingerprint(spark, Seq(dir), spec = "v2 text verbs a/u/d")) { tmp =>
       import spark.implicits._
       val docs = Tables.documents(spark, dir).select("doc_id", "text")
       var idx = api.TextIndex.build(docs, "doc_id", "text", tmp)

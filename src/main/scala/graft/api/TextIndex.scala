@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.operators.{GraphMaintenance, Retrieval, Tombstones}
 
@@ -50,9 +50,7 @@ final class TextIndex private (spark: SparkSession, val path: String) {
     * [[graft.operators.Tombstones.filterGenPublished]]). A reader at
     * ANY kill point of a crashed ingest therefore sees exactly the
     * pre-batch or the post-batch index — never duplicate doclen rows,
-    * orphaned postings, or half-retired ids. Legacy artifacts (no
-    * `_pubgen` file) gate at MaxValue, reproducing the old filterGen
-    * read exactly.
+    * orphaned postings, or half-retired ids.
     */
   private def gated(tablePath: String): DataFrame = {
     val pg = TextIndex.publishedGen(spark, path)
@@ -179,34 +177,19 @@ final class TextIndex private (spark: SparkSession, val path: String) {
     TextIndex.verbLocks.computeIfAbsent(path, _ => new Object).synchronized {
      graft.operators.Artifacts.withLease(spark, path, s"TextIndex.$verb") {
       completeInflight() // settle a crashed predecessor first
-      val batchIds = docs.select(col(idCol).cast("long").as("doc_id"))
-      // LEGACY kill-every-generation tombstones (plain sidecar rows a
-      // pre-generation delete wrote) would hide the appended rows at
-      // ANY generation — loud failure, with compact() as the unlock
-      if (Tombstones.present(spark, path)) {
-        val t = Tombstones.tombs(spark, path).where(col("upto") === Long.MaxValue)
-        val tomb = batchIds.join(t, batchIds("doc_id") === t("id"), "leftsemi")
-          .limit(1).collect()
-        require(tomb.isEmpty,
-          s"TextIndex.$verb: doc_id ${tomb.headOption.map(_.get(0)).orNull} carries " +
-            "a kill-all tombstone (written by a pre-generation delete) — its rows " +
-            "would be hidden at any generation; run compact() before reusing it")
-      }
       if (verb == "append") {
         // new-docs-only against the LIVE view: a live duplicate would
         // inflate N/avgdl and split tf (upsert is the replacement
         // verb); a delete()d id has no live rows and is fair game —
         // its new rows carry a higher generation than the tombstone
         val dup = docLengths.select("doc_id")
-          .join(batchIds, Seq("doc_id"), "leftsemi").limit(1).collect()
+          .join(docs.select(col(idCol).cast("long").as("doc_id")), Seq("doc_id"), "leftsemi")
+          .limit(1).collect()
         require(dup.isEmpty,
           s"TextIndex.append is new-docs-only: doc_id ${dup.headOption.map(_.get(0)).orNull} " +
             "is live in the index (re-appending would inflate df/N and split tf; " +
             "use upsert to replace it)")
       }
-      // adopt the publish gate before the first new-protocol mutation
-      // touches a legacy artifact: everything standing is published
-      TextIndex.ensurePublishedGen(spark, path)
       val g = Tombstones.nextGen(spark, path)
       GraphMaintenance.writeMarker(spark, path, verb, g)
       // the batch must carry the index's own metadata columns, so a
@@ -278,14 +261,13 @@ final class TextIndex private (spark: SparkSession, val path: String) {
     TextIndex.verbLocks.computeIfAbsent(path, _ => new Object).synchronized {
      graft.operators.Artifacts.withLease(spark, path, "TextIndex.delete") {
       completeInflight()
-      TextIndex.ensurePublishedGen(spark, path)
       // generation-SCOPED: kills every row the ids have as of now while
       // leaving them REUSABLE — a later append/upsert carries a higher
-      // generation and outlives this tombstone (the old kill-forever
-      // rows forced a compact() before any id reuse). Under the publish
-      // gate the appended tombstone is INERT (upto = g-1 is not below
-      // the published generation) until the marker protocol publishes
-      // generation g — the delete too is all-or-nothing to a reader.
+      // generation and outlives this tombstone, with no compact() before
+      // the id's reuse. Under the publish gate the appended tombstone is
+      // INERT (upto = g-1 is not below the published generation) until
+      // the marker protocol publishes generation g — the delete too is
+      // all-or-nothing to a reader.
       val g = Tombstones.nextGen(spark, path)
       GraphMaintenance.writeMarker(spark, path, "delete", g)
       Tombstones.appendUpto(spark, path,
@@ -401,9 +383,11 @@ object TextIndex {
     Retrieval.tokensProjection(docs, idCol, textCol, metaCols: _*)
       .write.mode("overwrite").parquet(scratch)
     val tokens = spark.read.parquet(scratch)
-    Retrieval.postingsFromTokens(tokens)
+    // generation 0 = the build, like every generation-stamped layout:
+    // each later append stamps its own, so both tables keep one schema
+    Retrieval.postingsFromTokens(tokens).withColumn("gen", lit(0L))
       .write.mode("overwrite").parquet(s"$path/postings")
-    Retrieval.docLengthsFromTokens(tokens)
+    Retrieval.docLengthsFromTokens(tokens).withColumn("gen", lit(0L))
       .write.mode("overwrite").parquet(s"$path/doclen")
     val p = new org.apache.hadoop.fs.Path(scratch)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -432,6 +416,11 @@ object TextIndex {
     // aside-rename and the swap-in leaves a table dir missing
     Tombstones.recover(spark, s"$path/postings")
     Tombstones.recover(spark, s"$path/doclen")
+    val pubgen = new org.apache.hadoop.fs.Path(s"$path/_pubgen")
+    val fs = pubgen.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(pubgen) || fs.exists(new org.apache.hadoop.fs.Path(s"$path/_pubgen_tmp")),
+      s"$path is a text index without _pubgen, a layout only older builds wrote — " +
+        "rebuild it (TextIndex.build) from its source documents")
     val idx = new TextIndex(spark, path)
     // a crashed ingest leaves its `_inflight` marker: finish its
     // publish (or roll the half-landed slice back) so this load serves
@@ -471,11 +460,9 @@ object TextIndex {
     * index root, the single rename behind the atomic publish: readers
     * serve rows at `gen <= publishedGen` with only tombstones at
     * `upto < publishedGen` effective, and every mutation's final step
-    * is bumping this file to its own generation. Absent (an artifact
-    * last written by the pre-publish protocol, never mutated since) ⇒
-    * MaxValue: serve everything, exactly the legacy read. Temp-file
-    * adoption heals a crash between the delete and the rename, like
-    * the `_gen` counter's.
+    * is bumping this file to its own generation ([[TextIndex.build]]
+    * writes 0). Temp-file adoption heals a crash between the delete and
+    * the rename, like the `_gen` counter's.
     */
   private[graft] def publishedGen(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_pubgen")
@@ -501,7 +488,7 @@ object TextIndex {
       else Long.MaxValue
     } catch {
       // the exists/open gap can race the writer's delete: by then the
-      // batch is fully landed (publish is the LAST step), so the legacy
+      // batch is fully landed (publish is the LAST step), so the
       // serve-everything gate IS the post-batch view
       case _: java.io.FileNotFoundException => Long.MaxValue
       // a reader racing the FIRST-ever publish can open a temp the
@@ -525,17 +512,6 @@ object TextIndex {
     // `_pubgen` exists afterwards
     if (!fs.rename(tmp, p))
       require(fs.exists(p), s"_pubgen rename failed for $path")
-  }
-
-  /** Adopt the publish gate on a legacy artifact before its first
-    * new-protocol mutation: everything standing is published (the gate
-    * lands at the current generation counter, under the lease).
-    */
-  private[graft] def ensurePublishedGen(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_pubgen")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p) && !fs.exists(new org.apache.hadoop.fs.Path(s"$path/_pubgen_tmp")))
-      writePublishedGen(spark, path, Tombstones.currentGen(spark, path))
   }
 
   /** Per-index-path JVM locks serializing ALL in-process maintenance

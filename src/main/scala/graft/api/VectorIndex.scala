@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.operators.{Artifacts, BinaryIndex, FlatQuantizer, GraphAnn, GraphMaintenance, GraphQuantizer, IvfIndex, Knn, LshIndex, PqIndex, RoutedGraphQuantizer, RoutedQuantizer, SqIndex, Tombstones, Upsert}
 
@@ -110,7 +110,6 @@ class VectorIndex private (
     private val loadedPath: Option[String] = None,
     private val loadedQuantizer: Option[GraphQuantizer] = None,
     private val loadedRouteCents0: () => Option[Array[Array[Float]]] = () => None,
-    private val loadedServeSchemas0: () => Option[(StructType, StructType)] = () => None,
     private val inlineCap: Int = Tombstones.InlineCap) {
 
   import VectorIndex._
@@ -122,14 +121,6 @@ class VectorIndex private (
     * ([[loadedGraphRoute]]). Frozen at build, so memoizing is safe.
     */
   private lazy val loadedRouteCents: Option[Array[Array[Float]]] = loadedRouteCents0()
-
-  /** The (entries, edges) serving schemas with `gen` forced in, memoized
-    * per handle and inferred lazily — a serve call replays them instead
-    * of paying two schema-inference jobs. Mutations append rows of the
-    * same schemas (gen is forced present either way), so the memo
-    * outlives them; the tombstone sidecar is still read per call.
-    */
-  private lazy val loadedServeSchemas: Option[(StructType, StructType)] = loadedServeSchemas0()
 
   private def requireDim(vector: Array[Float]): Unit =
     require(vector.length == key.dim,
@@ -195,12 +186,9 @@ class VectorIndex private (
   private def reopened(view: Tombstones.View): VectorIndex = {
     val p = view.base
     spark.catalog.refreshByPath(p)
-    val serveSchemas = for {
-      es <- view.schema("serve/entries"); gs <- view.schema("serve/edges")
-    } yield (es, gs)
     new VectorIndex(key, params, spark, liveGraphData(view.read("data"), p),
       loadedCentroids, loadedCodebooks, loadedBounds, loadedPath, loadedQuantizer,
-      loadedRouteCents0, () => serveSchemas, inlineCap)
+      loadedRouteCents0, inlineCap)
   }
 
   /** The same handle with another cap on the tombstone rows its verbs
@@ -211,7 +199,7 @@ class VectorIndex private (
     */
   private[graft] def withInlineCap(cap: Int): VectorIndex =
     new VectorIndex(key, params, spark, state, loadedCentroids, loadedCodebooks,
-      loadedBounds, loadedPath, loadedQuantizer, loadedRouteCents0, loadedServeSchemas0, cap)
+      loadedBounds, loadedPath, loadedQuantizer, loadedRouteCents0, cap)
 
   /** Open the verb's artifact view under the lease and settle any
     * crashed predecessor through it, so the verb's probes see a
@@ -221,35 +209,6 @@ class VectorIndex private (
     val view = GraphMaintenance.view(spark, p, inlineCap)
     GraphMaintenance.recoverIfInflight(view, q, params.graphK, key.metricType.name)
     view
-  }
-
-  /** Loud guard for the maintained-GRAPH ingest paths, now needed only
-    * for LEGACY kill-every-generation tombstones (plain sidecar rows a
-    * pre-generation delete wrote): a generation-scoped tombstone lets
-    * the id be reused — the re-appended rows carry a HIGHER generation
-    * and survive the read filter — but a kill-all row would silently
-    * hide them (the hazard [[graft.api.TextIndex.append]] guards
-    * against).
-    */
-  private def requireNotForeverTombstoned(view: Tombstones.View, batch: DataFrame): Unit = {
-    // the view's fold answers on the driver; with no kill-all row there
-    // is nothing to probe
-    val forever = view.inline.map(_.collect { case (id, u) if u == Long.MaxValue => id }.toSet)
-    val hit =
-      if (forever.exists(_.isEmpty)) None
-      else {
-        val ids = batch.select(col("id"))
-        (forever, Tombstones.collectAtMost(ids, Tombstones.InlineCap)) match {
-          case (Some(f), Some(rows)) => rows.map(_.getLong(0)).find(f)
-          case _ =>
-            val t = Tombstones.tombs(spark, view.base).where(col("upto") === Long.MaxValue)
-            ids.join(t, Seq("id"), "leftsemi").limit(1).collect().headOption.map(_.getLong(0))
-        }
-      }
-    require(hit.isEmpty,
-      s"id ${hit.orNull} carries a kill-all tombstone in " +
-        s"${view.base} (written by a pre-generation delete) — its rows would be hidden by " +
-        "the read filter; save() a compacted copy before reusing it")
   }
 
   /** Bulk append; `rows` needs columns (id, vectors[, data]). The dim
@@ -271,7 +230,6 @@ class VectorIndex private (
       Artifacts.withLease(spark, p, "VectorIndex.insertAll") {
         val view = openView(p, q)
         val batch = normalize(rows, key.dim)
-        requireNotForeverTombstoned(view, batch)
         // new-nodes-only: a re-ingested LIVE id would duplicate its
         // layout rows and corrupt later batches' candidate sets (upsert
         // is the verb for replacement); probe-pruned via the _ids sidecar
@@ -328,9 +286,7 @@ class VectorIndex private (
     case Some((p, q)) =>
       Artifacts.withLease(spark, p, "VectorIndex.upsertAll") {
         val view = openView(p, q)
-        val batch = normalize(rows, key.dim)
-        requireNotForeverTombstoned(view, batch)
-        GraphMaintenance.ingest(view, batch, q, params.graphK,
+        GraphMaintenance.ingest(view, normalize(rows, key.dim), q, params.graphK,
           key.metricType.name, "upsert")
         reopened(view)
       }
@@ -385,7 +341,7 @@ class VectorIndex private (
     case Some((p, q)) if Tombstones.present(spark, p) =>
       Artifacts.withLease(spark, p, "VectorIndex.compact") {
         val view = openView(p, q)
-        Tombstones.compact(view, GraphMaintenance.compactTables(spark, p))
+        Tombstones.compact(view, GraphMaintenance.compactTables)
         GraphMaintenance.afterCompact(view, q, Tombstones.currentGen(spark, p))
         reopened(view)
       }
@@ -465,17 +421,11 @@ class VectorIndex private (
     */
   private def loadedServe: Option[(DataFrame, DataFrame)] =
     loadedPath.map { p =>
-      val (entrySchema, edgeSchema) = loadedServeSchemas.getOrElse((
-        Tombstones.genSchema(spark, s"$p/serve/entries"),
-        Tombstones.genSchema(spark, s"$p/serve/edges")))
-      val raw = Tombstones.readGen(spark, s"$p/serve/entries", entrySchema)
-      // routed layouts persist each entry's route cell — keep it so a
-      // routed walk reads the build-time assignment (legacy layouts
-      // without the column stay route-less)
-      val cols =
-        if (raw.columns.contains("route_cell")) Seq(col("id"), col("vec"), col("route_cell"))
-        else Seq(col("id"), col("vec"))
-      val edgesRaw = Tombstones.readGen(spark, s"$p/serve/edges", edgeSchema)
+      val raw = GraphMaintenance.read(spark, p, "serve/entries")
+      // each entry's persisted route cell rides along, so a routed walk
+      // reads the build-time assignment
+      val cols = Seq(col("id"), col("vec"), col("route_cell"))
+      val edgesRaw = GraphMaintenance.read(spark, p, "serve/edges")
       // these frames are REBUILT per serving call, so a bounded sidecar
       // inlines as a literal snapshot (one collect here) instead of the
       // per-action sidecar scan + broadcast the join filters would pay
@@ -506,18 +456,13 @@ class VectorIndex private (
       // the route MATRIX is memoized in the handle and read lazily
       // ([[loadedRouteCents]] — frozen at build, so the memo never goes
       // stale); the switch DECISION stays per-call AND decides from the
-      // driver-side `_entrycount` manifest + the conf threshold FIRST
-      // (both move under the handle: mutations grow the artifact, tests
-      // force the conf), so a declining call — the below-threshold
-      // regime — pays zero parquet reads; only legacy layouts without
-      // the manifest fall back to the routeK² proxy (which needs the
-      // matrix)
-      val decide = GraphAnn.readEntryCount(spark, s"$p/serve") match {
-        case Some(e) => e > GraphAnn.routeThreshold(spark)
-        case None => loadedRouteCents.exists(rc =>
-          rc.length.toLong * rc.length > GraphAnn.routeThreshold(spark))
-      }
-      if (decide) loadedRouteCents.map(rc => (rc, GraphAnn.RouteProbe)) else None
+      // driver-side `_entrycount` manifest + the conf threshold (both
+      // move under the handle: mutations grow the artifact, tests force
+      // the conf), so a declining call — the below-threshold regime —
+      // pays zero parquet reads
+      if (GraphAnn.readEntryCount(spark, s"$p/serve").exists(_ > GraphAnn.routeThreshold(spark)))
+        loadedRouteCents.map(rc => (rc, GraphAnn.RouteProbe))
+      else None
     }
 
   /** The GRAPH serving frames built IN-PLAN over `base` — the
@@ -921,9 +866,7 @@ class VectorIndex private (
         params.ivfClusters, params.nprobe, params.lshBits, params.lshRadius,
         params.binaryRerank, params.lshBands, params.pqSubspaces, params.pqRerank,
         params.sqRerank, params.graphK, params.graphBeam, params.graphHops))
-      .toDF("index_type", "dim", "metric", "ivf_clusters", "nprobe", "lsh_bits",
-        "lsh_radius", "binary_rerank", "lsh_bands", "pq_m", "pq_rerank", "sq_rerank",
-        "graph_k", "graph_beam", "graph_hops")
+      .toDF(MetaSchema.fieldNames.toSeq: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
     key.indexType match {
       case IndexType.IVF =>
@@ -1062,6 +1005,21 @@ object VectorIndex {
   /** Persisted-layout columns that only exist on a [[load]]ed state. */
   private val LayoutCols = Seq("cluster", "bucket", "band", "codes")
 
+  /** The 1-row `meta` table [[VectorIndex#save]] writes: key + params. */
+  private val MetaSchema = StructType(
+    Seq(StructField("index_type", StringType), StructField("dim", IntegerType),
+      StructField("metric", StringType)) ++
+    Seq("ivf_clusters", "nprobe", "lsh_bits", "lsh_radius", "binary_rerank", "lsh_bands",
+      "pq_m", "pq_rerank", "sq_rerank", "graph_k", "graph_beam", "graph_hops")
+      .map(StructField(_, IntegerType)))
+
+  /** The manifests every maintained GRAPH artifact carries beside its
+    * layout tables: the standing-id probe table, the growth-policy row
+    * count and the live entry count (a `_tmp` twin is a complete copy a
+    * crashed rename left behind, which the readers adopt).
+    */
+  private val MaintainedManifests = Seq("_ids", "_rowcount", "serve/_entrycount")
+
   /** Beam ceiling for walk-time filtered GRAPH search (reference:
     * hnsw_index.rs search_vectors_filter widens ef the same way). The
     * beam ADAPTS to a measured selectivity estimate — beam =
@@ -1110,7 +1068,7 @@ object VectorIndex {
     // plan-canonicalized cache reuse would otherwise serve them stale
     // (see [[VectorIndex#reopened]])
     spark.catalog.refreshByPath(path)
-    val m = spark.read.parquet(s"$path/meta").collect().head
+    val m = spark.read.schema(MetaSchema).parquet(s"$path/meta").collect().head
     val indexType = m.getAs[String]("index_type") match {
       case "FLAT"   => IndexType.FLAT
       case "IVF"    => IndexType.IVF
@@ -1128,59 +1086,50 @@ object VectorIndex {
       case "cosine" => Metric.Cosine
       case other    => throw new IllegalArgumentException(s"unknown metric $other")
     }
-    // meta columns added after a save format shipped get defaults, so
-    // indexes saved by older builds stay loadable (binary_rerank arrived
-    // after the 7-column format, lsh_bands after the 8-column one)
-    val fields = m.schema.fieldNames.toSet
-    // null-tolerant, not just absence-tolerant: a meta row read with
-    // mergeSchema across artifact versions can carry the COLUMN with a
-    // null value, and getAs[Int] would NPE on unboxing it
-    def intOr(name: String, default: Int): Int =
-      if (fields.contains(name) && !m.isNullAt(m.fieldIndex(name)))
-        m.getAs[Int](name)
-      else default
-    val params = IndexParams(m.getAs[Int]("ivf_clusters"), m.getAs[Int]("nprobe"),
-      m.getAs[Int]("lsh_bits"), m.getAs[Int]("lsh_radius"),
-      intOr("binary_rerank", 100), intOr("lsh_bands", 1),
-      intOr("pq_m", 8), intOr("pq_rerank", 100), intOr("sq_rerank", 100),
-      intOr("graph_k", 3), intOr("graph_beam", 8), intOr("graph_hops", 3))
+    def int(name: String): Int = m.getAs[Int](name)
+    val params = IndexParams(int("ivf_clusters"), int("nprobe"), int("lsh_bits"),
+      int("lsh_radius"), int("binary_rerank"), int("lsh_bands"), int("pq_m"),
+      int("pq_rerank"), int("sq_rerank"), int("graph_k"), int("graph_beam"), int("graph_hops"))
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(rel: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$rel"))
     // a crash between the renames of a tombstone fold (compact() or the
     // auto-compact inside the mutation protocol) can leave any of the
     // layout tables aside under _tomb_* names — repair before reading
+    if (indexType == IndexType.GRAPH)
+      for (rel <- Seq("data", "serve/edges", "serve/entries", "_ids"))
+        Tombstones.recover(spark, s"$path/$rel")
+    // a GRAPH save of a non-empty state writes the serving layout, the
+    // frozen quantizer and the mutation manifests: the artifact the
+    // verbs maintain in place (an empty save writes the data table alone)
+    val maintained = indexType == IndexType.GRAPH && exists("serve")
+    if (maintained) {
+      val missing = MaintainedManifests.filterNot(r => exists(r) || exists(s"${r}_tmp"))
+      require(missing.isEmpty,
+        s"$path is a maintained GRAPH index without ${missing.mkString(", ")}, a layout " +
+          "only older builds wrote — re-save the index from its source rows")
+    }
     // the frozen GRAPH blocking quantizer, in whichever shape the save
     // persisted: the routed TABLE (`quantizer/`, large-K saves) or the
     // flat literal (`centroids`)
-    def graphQuantizer(): Option[GraphQuantizer] = {
-      val qp = new org.apache.hadoop.fs.Path(s"$path/quantizer")
-      val cp = new org.apache.hadoop.fs.Path(s"$path/centroids")
-      val fs = qp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(qp))
+    val quantizer: Option[GraphQuantizer] =
+      if (!maintained) None
+      else if (exists("quantizer"))
         Some(RoutedGraphQuantizer(RoutedQuantizer.read(spark, s"$path/quantizer")))
-      else if (fs.exists(cp))
-        Some(FlatQuantizer(IvfIndex.readCentroids(spark, s"$path/centroids")))
-      else None
-    }
-    if (indexType == IndexType.GRAPH) {
-      for (rel <- Seq("data", "serve/edges", "serve/entries", "_ids"))
-        Tombstones.recover(spark, s"$path/$rel")
-      // a crashed mutation leaves its `_inflight` marker: finish its
-      // publish (serve edges / tombstones / heals) so this load serves
-      // the batch's latest state, not the mid-protocol one. Needs the
-      // single-writer lease — if another writer holds it, IT owns the
-      // marker (live mutation or the crashed-holder runbook in README),
-      // so a concurrent load just reads the transient-but-safe state.
-      if (GraphMaintenance.inflight(spark, path).isDefined
-          && Artifacts.leaseInfo(spark, path).isEmpty) {
-        graphQuantizer().foreach { q =>
-          val graphK = intOr("graph_k", 3)
-          try Artifacts.withLease(spark, path, "VectorIndex.load/recover") {
-            GraphMaintenance.recoverIfInflight(GraphMaintenance.view(spark, path), q,
-              graphK, metric.name)
-          } catch {
-            // lost the acquire race to a live writer — it will recover
-            case _: IllegalStateException => ()
-          }
-        }
+      else Some(FlatQuantizer(IvfIndex.readCentroids(spark, s"$path/centroids")))
+    // a crashed mutation leaves its `_inflight` marker: finish its
+    // publish (serve edges / tombstones / heals) so this load serves
+    // the batch's latest state, not the mid-protocol one. Needs the
+    // single-writer lease — if another writer holds it, IT owns the
+    // marker (live mutation or the crashed-holder runbook in README),
+    // so a concurrent load just reads the transient-but-safe state.
+    if (maintained && GraphMaintenance.inflight(spark, path).isDefined
+        && Artifacts.leaseInfo(spark, path).isEmpty) {
+      try Artifacts.withLease(spark, path, "VectorIndex.load/recover") {
+        GraphMaintenance.recoverIfInflight(GraphMaintenance.view(spark, path),
+          quantizer.get, params.graphK, metric.name)
+      } catch {
+        // lost the acquire race to a live writer — it will recover
+        case _: IllegalStateException => ()
       }
     }
     // the root tombstone sidecar (path-backed GRAPH deletes/upserts)
@@ -1188,13 +1137,8 @@ object VectorIndex {
     // GRAPH (upserted ids' superseded rows die, their replacements
     // live); absent sidecar = unchanged plan
     val state =
-      if (indexType == IndexType.GRAPH)
-        liveGraphData(Tombstones.readWithGen(spark, s"$path/data"), path)
+      if (maintained) liveGraphData(GraphMaintenance.read(spark, path, "data"), path)
       else Tombstones.filter(spark.read.parquet(s"$path/data"), path, "id")
-    val quantizer =
-      if (indexType == IndexType.GRAPH && state.columns.contains("cluster"))
-        graphQuantizer()
-      else None
     val centroids =
       if ((indexType == IndexType.IVF || indexType == IndexType.IVFPQ)
           && state.columns.contains("cluster"))
@@ -1205,38 +1149,20 @@ object VectorIndex {
           && state.columns.contains("codes"))
         Some(PqIndex.readCodebooks(spark, s"$path/codebooks"))
       else None
+    // a bounds dir exists iff the saved SQ8 state was non-empty
     val bounds =
-      if (indexType == IndexType.SQ8) {
-        // a bounds dir exists iff the saved state was non-empty
-        val bp = new org.apache.hadoop.fs.Path(s"$path/bounds")
-        val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(bp)) Some(SqIndex.readBounds(spark, s"$path/bounds")) else None
-      } else None
-    val rootPath =
-      if (indexType == IndexType.GRAPH) {
-        // a serve dir exists iff the saved state was non-empty
-        val sp = new org.apache.hadoop.fs.Path(s"$path/serve")
-        val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(sp)) Some(path) else None
-      } else None
+      if (indexType == IndexType.SQ8 && exists("bounds"))
+        Some(SqIndex.readBounds(spark, s"$path/bounds"))
+      else None
+    val rootPath = if (maintained) Some(path) else None
     // the entry-route MATRIX is frozen at build (mutations only
     // re-ASSIGN against it), so the handle memoizes it — but the READ
     // is deferred to the first serve call that actually routes: the
     // below-threshold regime never pays the route parquet collect, and
     // the per-call switch reads only driver-side manifests
-    lazy val routeCents = rootPath.flatMap { p =>
-      val rp = new org.apache.hadoop.fs.Path(s"$p/serve/route")
-      val fs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(rp)) Some(IvfIndex.readCentroids(spark, s"$p/serve/route"))
-      else None
-    }
-    // the serving tables' schemas, recorded on the first serve call
-    lazy val serveSchemas = rootPath.map(p => (
-      Tombstones.genSchema(spark, s"$p/serve/entries"),
-      Tombstones.genSchema(spark, s"$p/serve/edges")))
-    new VectorIndex(IndexKey(indexType, m.getAs[Int]("dim"), metric), params, spark,
-      state, centroids, codebooks, bounds, rootPath, quantizer, () => routeCents,
-      () => serveSchemas)
+    lazy val routeCents = rootPath.map(p => IvfIndex.readCentroids(spark, s"$p/serve/route"))
+    new VectorIndex(IndexKey(indexType, int("dim"), metric), params, spark,
+      state, centroids, codebooks, bounds, rootPath, quantizer, () => routeCents)
   }
 
   private def rowsDf(spark: SparkSession, rows: Seq[(Long, Array[Float], Option[String])]): DataFrame = {

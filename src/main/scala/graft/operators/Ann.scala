@@ -264,12 +264,6 @@ object LshIndex {
           .as(Seq("band", "bucket")))
       .write.mode("overwrite").partitionBy("band", "bucket").parquet(path)
 
-  def searchBandedPersisted(spark: SparkSession, path: String, idCol: String, vecCol: String,
-                            bandPlanes: Array[Array[Array[Float]]], queryVec: Array[Float],
-                            k: Int, radius: Int, metric: String = "l2"): DataFrame =
-    searchBandedPruned(spark.read.parquet(path), idCol, vecCol, bandPlanes,
-      queryVec, k, radius, metric)
-
   /** Search a [[writeBandPartitioned]]-shaped DataFrame (has band/bucket
     * partition columns): OR of per-band (band, bucket-ball) predicates —
     * both are partition columns, so the disjunction prunes at file

@@ -139,8 +139,8 @@ object GraphAnn {
         .coalesce(1).sortWithinPartitions("route_cell", "id")
         .write.mode("overwrite").parquet(s"$base/entries")
       // the LIVE entry count manifest the serve-time auto-switch reads
-      // (routeK² approximates build-time E; a maintained artifact keeps
-      // this current across mutations so the switch sees growth)
+      // (a maintained artifact keeps it current across mutations so the
+      // switch sees growth)
       writeEntryCount(spark, base, entriesP.count())
     } finally entriesP.unpersist()
   }
@@ -486,10 +486,9 @@ object GraphAnn {
   /** The `_entrycount` manifest inside a serve dir: the LIVE entry
     * count, written at build and refreshed by the mutation protocol
     * after its heals ([[GraphMaintenance.complete]]) — so the serve-time
-    * auto-switch decides from the artifact's CURRENT size, not the
-    * build-time routeK² proxy (a heavily-inserted artifact could sit
-    * above the real threshold while the stale proxy declined the
-    * route). Same write-temp-then-rename discipline as `_rowcount`.
+    * auto-switch decides from the artifact's CURRENT size (a
+    * heavily-inserted artifact crosses the threshold without a
+    * re-save). Same write-temp-then-rename discipline as `_rowcount`.
     */
   def writeEntryCount(spark: SparkSession, serveDir: String, e: Long): Unit = {
     val fs = new org.apache.hadoop.fs.Path(serveDir)
@@ -518,27 +517,17 @@ object GraphAnn {
   }
 
   /** The persisted entry route under `serveDir` (`route/`), taken when
-    * the entry count warrants it (or `force`). The switch reads only
-    * driver-side manifests: the LIVE `_entrycount` the build writes and
-    * every mutation refreshes, falling back to routeK² ≈ build-time E
-    * for legacy layouts without one — no action on the entries table
-    * decides the branch.
+    * the entry count warrants it (or `force`). The switch reads only the
+    * driver-side LIVE `_entrycount` manifest the build writes and every
+    * mutation refreshes — no action on the entries table decides the
+    * branch, and a declining call (the small-E regime) pays zero
+    * parquet reads.
     */
   def servingRoute(spark: SparkSession, serveDir: String,
-                   force: Boolean = false): Option[(Array[Array[Float]], Int)] = {
-    // decide from the driver-side `_entrycount` manifest BEFORE touching
-    // the route matrix: when the switch declines (the small-E regime),
-    // the declining call pays zero parquet reads — the old shape read
-    // the route centroids unconditionally, one wasted collect per
-    // unrouted serve. Legacy layouts without the manifest still fall
-    // back to the routeK² ≈ build-time-E proxy (which needs the matrix).
-    lazy val rc = IvfIndex.readCentroids(spark, s"$serveDir/route")
-    val decide = force || (readEntryCount(spark, serveDir) match {
-      case Some(e) => e > routeThreshold(spark)
-      case None    => rc.length.toLong * rc.length > routeThreshold(spark)
-    })
-    if (decide) Some((rc, RouteProbe)) else None
-  }
+                   force: Boolean = false): Option[(Array[Array[Float]], Int)] =
+    if (force || readEntryCount(spark, serveDir).exists(_ > routeThreshold(spark)))
+      Some((IvfIndex.readCentroids(spark, s"$serveDir/route"), RouteProbe))
+    else None
 
   /** `route = Some((routeCents, routeProbe))` replaces hop 0's
     * |q| × E entry cross-join with the coarse ENTRY ROUTE

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions._
@@ -42,13 +42,14 @@ import graft.functions._
   *     `g` yet.
   *
   * Every step reads through one [[Tombstones.View]] the verb opens
-  * after taking the lease (layout schemas inferred once, the sidecar
-  * folded once on the driver and kept current by the verb's own
-  * appends), and the heals are scoped to the batch: the entry heal and
-  * the `_entrycount` rewrite run only when a victim was a live entry
-  * or the batch landed in a cluster without one, and the re-link
-  * derives its victims, affected and starved sets from the fold plus
-  * two IN-pruned collects.
+  * after taking the lease: the layout tables under the schemas
+  * declared below ([[Schemas]], next to their writers — no table's
+  * schema is inferred), the sidecar folded once on the driver and kept
+  * current by the verb's own appends. The heals are scoped to the
+  * batch: the entry heal and the `_entrycount` rewrite run only when a
+  * victim was a live entry or the batch landed in a cluster without
+  * one, and the re-link derives its victims, affected and starved sets
+  * from the fold plus two IN-pruned collects.
   *
   * Failure modes by window (the crash-injection matrix in ApiSpec):
   * before step 2 — the mutation simply never happened (a generation
@@ -75,6 +76,34 @@ object GraphMaintenance {
   private def edgesPath(p: String) = s"$p/serve/edges"
   private def entriesPath(p: String) = s"$p/serve/entries"
   private def idsPath(p: String) = s"$p/_ids"
+
+  private val vector = ArrayType(FloatType)
+
+  /** The layout tables of a maintained GRAPH artifact, each with the one
+    * schema every writer of it produces: the save
+    * ([[graft.api.VectorIndex#save]], [[GraphAnn.buildServingMaintained]],
+    * [[writeIds]]), the verbs' appends below ([[ingest]],
+    * [[appendServeEdges]], [[refreshEntries]], [[relink]],
+    * [[appendIds]]) and the tombstone fold, which rewrites each table
+    * from its own read. Every reader reads under these, so no read of
+    * the layout infers a schema. `cluster` is the data table's partition
+    * column, which a parquet read places last.
+    */
+  private[graft] val Schemas: Map[String, StructType] = Map(
+    "data" -> StructType(Seq(StructField("id", LongType), StructField("vectors", vector),
+      StructField("data", StringType), StructField("gen", LongType),
+      StructField("cluster", IntegerType))),
+    "serve/edges" -> StructType(Seq(StructField("src_id", LongType),
+      StructField("dst_id", LongType), StructField("dst_vec", vector),
+      StructField("gen", LongType))),
+    "serve/entries" -> StructType(Seq(StructField("cluster", IntegerType),
+      StructField("id", LongType), StructField("vec", vector),
+      StructField("gen", LongType), StructField("route_cell", IntegerType))),
+    "_ids" -> StructType(Seq(StructField("id", LongType), StructField("gen", LongType))))
+
+  /** A layout table of the artifact at `p`, under its declared schema. */
+  def read(spark: SparkSession, p: String, rel: String): DataFrame =
+    spark.read.schema(Schemas(rel)).parquet(s"$p/$rel")
 
   /** Measurement seam for the recall-under-churn experiment (AnnSpec's
     * CHURN.json): the session conf `spark.graft.graph.heals` (default
@@ -148,15 +177,6 @@ object GraphMaintenance {
     */
   private val ProbeIsinMax = 8192
 
-  /** The `_ids` sidecar's rows as [[appendIds]] / [[writeIds]] write
-    * them — a fixed read schema, so probing it infers nothing.
-    */
-  private val IdsSchema = StructType(Seq(
-    StructField("id", LongType), StructField("gen", LongType)))
-
-  def idsPresent(spark: SparkSession, p: String): Boolean =
-    fsOf(spark, p).exists(new Path(idsPath(p)))
-
   /** Append the batch's (id, gen) rows to the `_ids` probe sidecar:
     * id-sorted, one file, 1 MB row groups — so a later standing-id
     * probe for a small batch reads O(touched row groups), flat in
@@ -187,18 +207,12 @@ object GraphMaintenance {
       .write.mode("overwrite").option("parquet.block.size", (1L << 20).toString)
       .parquet(idsPath(p))
 
-  /** PHYSICAL standing (id, gen) rows — the `_ids` sidecar when the
-    * artifact has one (probe-pruned reads), else the data layout's
-    * projected columns (legacy artifacts saved before the sidecar
-    * existed — a narrow corpus scan, the shape this sidecar removes).
+  /** PHYSICAL standing (id, gen) rows — the `_ids` sidecar
+    * (probe-pruned reads instead of a scan of the data layout).
     */
-  def standingIds(spark: SparkSession, p: String): DataFrame =
-    if (idsPresent(spark, p)) spark.read.schema(IdsSchema).parquet(idsPath(p))
-    else Tombstones.readWithGen(spark, dataPath(p)).select(col("id"), col("gen"))
+  def standingIds(spark: SparkSession, p: String): DataFrame = read(spark, p, "_ids")
 
-  private def standingIds(view: Tombstones.View): DataFrame =
-    (if (idsPresent(view.spark, view.base)) view.read("_ids") else view.read("data"))
-      .select(col("id"), col("gen"))
+  private def standingIds(view: Tombstones.View): DataFrame = view.read("_ids")
 
   /** The standing (id, gen) rows whose id appears in `batchIds` — the
     * one probe every mutation needs. Small batches push an `id IN`
@@ -226,19 +240,20 @@ object GraphMaintenance {
 
   /** (physical data rows, as-of generation) — maintained under the
     * lease so [[Tombstones.maybeCompact]]'s growth policy never pays a
-    * corpus-wide `count()` per mutation. None on legacy artifacts.
+    * corpus-wide `count()` per mutation. A crash between
+    * [[writeRowCount]]'s delete and rename is healed by adopting the
+    * complete temp.
     */
-  def readRowCount(spark: SparkSession, p: String): Option[(Long, Long)] = {
+  def readRowCount(spark: SparkSession, p: String): (Long, Long) = {
     val fs = fsOf(spark, p)
     val rp = rowcountPath(p)
-    if (!fs.exists(rp)) None
-    else {
-      val in = fs.open(rp)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-      val parts = raw.trim.split(",")
-      scala.util.Try((parts(0).toLong, parts(1).toLong)).toOption
-    }
+    val tmp = new Path(s"$p/_rowcount_tmp")
+    if (!fs.exists(rp) && fs.exists(tmp)) fs.rename(tmp, rp)
+    val in = fs.open(rp)
+    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+              finally in.close()
+    val parts = raw.trim.split(",")
+    (parts(0).toLong, parts(1).toLong)
   }
 
   def writeRowCount(spark: SparkSession, p: String, rows: Long, g: Long): Unit = {
@@ -257,13 +272,8 @@ object GraphMaintenance {
     if (fs.exists(tmp)) fs.delete(tmp, false)
   }
 
-  /** Physical data rows for the growth policy: the maintained manifest
-    * when present, else one narrow count (legacy artifacts only pay it
-    * until their next save/compact writes the manifest).
-    */
-  def physicalRows(spark: SparkSession, p: String): Long =
-    readRowCount(spark, p).map(_._1).getOrElse(
-      standingIds(spark, p).count())
+  /** Physical data rows for the growth policy: the maintained manifest. */
+  def physicalRows(spark: SparkSession, p: String): Long = readRowCount(spark, p)._1
 
   /** The tables a GRAPH tombstone fold rewrites, each with its
     * persisted layout reproduced (cluster partitioning on data,
@@ -271,35 +281,28 @@ object GraphMaintenance {
     * sidecar). An edge dies if EITHER endpoint's tombstone covers its
     * generation; a dead medoid entry disappears (and [[refreshEntries]]
     * re-seeds its cluster) — exactly the read-time filter's semantics,
-    * so compaction preserves serve-equality. `_ids` folds only when the
-    * artifact has one (legacy artifacts gain it at their next save).
+    * so compaction preserves serve-equality.
     */
-  def compactTables(spark: SparkSession, p: String): Seq[Tombstones.TombTable] = {
-    val base = Seq(
-      Tombstones.TombTable("data", Seq("id"), partitionCols = Seq("cluster"),
-        genCol = Some("gen")),
-      Tombstones.TombTable("serve/edges", Seq("src_id", "dst_id"),
-        sortCols = Seq("src_id", "dst_id"), genCol = Some("gen"),
-        blockBytes = Some(EdgeBlockBytes)),
-      Tombstones.TombTable("serve/entries", Seq("id"), genCol = Some("gen")))
-    if (idsPresent(spark, p))
-      base :+ Tombstones.TombTable("_ids", Seq("id"), sortCols = Seq("id"),
-        genCol = Some("gen"), blockBytes = Some(1L << 20))
-    else base
-  }
+  val compactTables: Seq[Tombstones.TombTable] = Seq(
+    Tombstones.TombTable("data", Seq("id"), partitionCols = Seq("cluster"),
+      genCol = Some("gen")),
+    Tombstones.TombTable("serve/edges", Seq("src_id", "dst_id"),
+      sortCols = Seq("src_id", "dst_id"), genCol = Some("gen"),
+      blockBytes = Some(EdgeBlockBytes)),
+    Tombstones.TombTable("serve/entries", Seq("id"), genCol = Some("gen")),
+    Tombstones.TombTable("_ids", Seq("id"), sortCols = Seq("id"),
+      genCol = Some("gen"), blockBytes = Some(1L << 20)))
 
   // ----------------------------------------------------------------- view
 
   /** The artifact view a GRAPH verb opens right after it takes the
-    * lease ([[Tombstones.View]]): the data, serving-edge and entry
-    * schemas (one inference job each), the `_ids` sidecar under its
-    * fixed schema, and the tombstone sidecar folded on the driver. Every
-    * step below reads through it.
+    * lease ([[Tombstones.View]]): the layout tables under [[Schemas]]
+    * and the tombstone sidecar folded on the driver. Every step below
+    * reads through it.
     */
   def view(spark: SparkSession, p: String,
            cap: Int = Tombstones.InlineCap): Tombstones.View =
-    Tombstones.View(spark, p, Seq("data", "serve/edges", "serve/entries"),
-      fixed = Map("_ids" -> IdsSchema), cap = cap)
+    Tombstones.View(spark, p, Schemas, cap)
 
   /** True iff `df` has at least one row — one job, however sparse. */
   private def nonEmpty(df: DataFrame): Boolean =
@@ -398,14 +401,13 @@ object GraphMaintenance {
       relinkStarved(view, k, metric, g)
     }
     // (g) live-entry manifest: the serve-time route auto-switch reads
-    // this instead of the build-time routeK² proxy, so an artifact
-    // that grows past the threshold under inserts flips the switch
-    // without a re-save. The count moves only when an entry died or
-    // the heal re-seeded one — exactly when entriesHit holds.
-    if (entriesHit || GraphAnn.readEntryCount(spark, s"$p/serve").isEmpty)
-      writeEntryCount(view)
+    // it, so an artifact that grows past the threshold under inserts
+    // flips the switch without a re-save. The count moves only when an
+    // entry died or the heal re-seeded one — exactly when entriesHit
+    // holds.
+    if (entriesHit) writeEntryCount(view)
     clearMarker(spark, p)
-    if (Tombstones.maybeCompact(view, compactTables(spark, p), physicalRows(spark, p)))
+    if (Tombstones.maybeCompact(view, compactTables, physicalRows(spark, p)))
       // the fold changes no live row: with the heals on, the scoped heal
       // above already re-seeded every cluster this batch could empty, so
       // only the heal-less arm re-seeds here (as the fold always did)
@@ -423,8 +425,7 @@ object GraphMaintenance {
     val ids = batch.map(_.map(_._1))
     val batchIds = dataG.select(col("id"))
     // (a) probe sidecar — before any probe could consult it
-    if (idsPresent(spark, p)
-        && !(resumed && nonEmpty(view.read("_ids").where(col("gen") === g))))
+    if (!(resumed && nonEmpty(view.read("_ids").where(col("gen") === g))))
       ids match {
         case Some(a) => appendIds(spark, p, a, g)
         case None    => appendIds(spark, p, batchIds, g)
@@ -447,10 +448,9 @@ object GraphMaintenance {
         if (nonEmpty(changed)) view.appendUpto(changed, g - 1)
     }
     // (d) growth-policy manifest
-    readRowCount(spark, p).foreach { case (n, asOf) =>
-      if (asOf < g)
-        writeRowCount(spark, p, n + ids.map(_.length.toLong).getOrElse(dataG.count()), g)
-    }
+    val (n, asOf) = readRowCount(spark, p)
+    if (asOf < g)
+      writeRowCount(spark, p, n + ids.map(_.length.toLong).getOrElse(dataG.count()), g)
   }
 
   /** Whether mutation `g` can have left a cluster with live rows but no
@@ -499,9 +499,7 @@ object GraphMaintenance {
   def afterCompact(view: Tombstones.View, q: GraphQuantizer, g: Long,
                    reseed: Boolean = true): Unit = {
     writeRowCount(view.spark, view.base, standingIds(view).count(), g)
-    if ((reseed && refreshEntries(view, q, g))
-        || GraphAnn.readEntryCount(view.spark, s"${view.base}/serve").isEmpty)
-      writeEntryCount(view)
+    if (reseed && refreshEntries(view, q, g)) writeEntryCount(view)
   }
 
   // ---------------------------------------------------------------- edges
@@ -607,21 +605,14 @@ object GraphMaintenance {
     try {
       val appended = nonEmpty(medoids)
       if (appended) {
-        // route upkeep: a routed layout's re-seeded entry joins the route
-        // table at append (assigned against the FROZEN route centroids,
-        // like data rows against the frozen coarse quantizer) — without
-        // this, one heal appends a route-less row and a routed artifact
-        // silently degrades to unrouted (the routed walk would never
-        // start from the healed entry). Legacy route-less layouts append
-        // the original schema unchanged.
-        val routeDir = s"$p/serve/route"
-        val hasRoute = fsOf(spark, p).exists(new Path(routeDir))
-        val stamped =
-          if (hasRoute)
-            medoids.withColumn("route_cell",
-              nearestCentroid(col("vec"), IvfIndex.readCentroids(spark, routeDir)))
-          else medoids
-        stamped.write.mode("append").parquet(entriesPath(p))
+        // route upkeep: the re-seeded entry joins the route table at
+        // append (assigned against the FROZEN route centroids, like data
+        // rows against the frozen coarse quantizer) — without this, one
+        // heal appends a route-less row and a routed walk would never
+        // start from the healed entry
+        medoids.withColumn("route_cell",
+            nearestCentroid(col("vec"), IvfIndex.readCentroids(spark, s"$p/serve/route")))
+          .write.mode("append").parquet(entriesPath(p))
       }
       appended
     } finally medoids.unpersist()
@@ -667,9 +658,7 @@ object GraphMaintenance {
         }
       case None =>
         // victims = THIS batch's tombstone appends, probed on the RAW
-        // sidecar rows (upto_gen = g-1): the max-folded tombs() view
-        // would hide an id that ALSO carries a legacy kill-forever row
-        // (upto = MaxValue folds over g-1) and skip its neighbors' heal
+        // sidecar rows (upto_gen = g-1), not the max-folded tombs() view
         val victims = Tombstones.rawUpto(view.spark, view.base, g - 1)
         val edgesPhys = view.read("serve/edges")
         val affected = edgesPhys

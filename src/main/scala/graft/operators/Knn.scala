@@ -544,15 +544,6 @@ object Knn {
     * precisely the standing build rows plus the batch's symmetrized
     * rows (no cross-duplicates: every batch row touches a new id).
     */
-  /** `gen`/`tombRoot` (set together by the facade's maintained-GRAPH
-    * verbs): `gen` stamps the appended layout rows AND serving edges
-    * with the batch's generation, `tombRoot` makes the new-nodes-only
-    * probe and the standing candidate read generation-aware
-    * ([[Tombstones.filterGen]] against the artifact ROOT's sidecar) —
-    * so rows an in-place upsert just superseded are invisible as
-    * duplicates and as neighbors: the batch's edges attach only LIVE
-    * vectors.
-    */
   def appendGraphEdges(
       batch: DataFrame,
       idCol: String,
@@ -562,19 +553,9 @@ object Knn {
       metric: String,
       graphPath: Option[String],
       layoutPath: String,
-      servePath: Option[String] = None,
-      gen: Option[Long] = None,
-      tombRoot: Option[String] = None): Unit = {
+      servePath: Option[String] = None): Unit = {
     val spark = batch.sparkSession
-    def live(df: DataFrame): DataFrame = tombRoot match {
-      case Some(root) => Tombstones.filterGen(df, root, idCol, "gen")
-      case None       => df
-    }
-    def readLayout(): DataFrame = tombRoot match {
-      case Some(_) => Tombstones.readWithGen(spark, layoutPath)
-      case None    => spark.read.parquet(layoutPath)
-    }
-    val dup = live(readLayout()).select(col(idCol))
+    val dup = spark.read.parquet(layoutPath).select(col(idCol))
       .join(batch.select(col(idCol)), Seq(idCol), "leftsemi")
       .limit(1).collect()
     require(dup.isEmpty,
@@ -584,10 +565,8 @@ object Knn {
     val touched = batch
       .select(graft.functions.nearestCentroid(col(vecCol), centroids).as("cluster"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val standingPruned = (tombRoot match {
-      case Some(_) => live(readLayout().where(col("cluster").isin(touched: _*)))
-      case None    => IvfIndex.readPruned(spark, layoutPath, touched, idCol)
-    }).select(col(idCol), col(vecCol))
+    val standingPruned = IvfIndex.readPruned(spark, layoutPath, touched, idCol)
+      .select(col(idCol), col(vecCol))
     val cand = standingPruned.unionByName(batch.select(col(idCol), col(vecCol)))
     val edges = ivfGraphEdges(batch, cand, idCol, vecCol, centroids, k, metric)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -600,15 +579,12 @@ object Knn {
         val sym = directed.unionByName(
           directed.select(col("dst_id").as("src_id"), col("src_id").as("dst_id")))
           .distinct()
-        val serveRows = sym
-          .join(cand.select(col(idCol).as("dst_id"), col(vecCol).as("dst_vec")), "dst_id")
+        sym.join(cand.select(col(idCol).as("dst_id"), col(vecCol).as("dst_vec")), "dst_id")
           .select(col("src_id"), col("dst_id"), col("dst_vec"))
-        gen.map(g => serveRows.withColumn("gen", lit(g))).getOrElse(serveRows)
           .write.mode("append").parquet(s"$sp/edges")
       }
     } finally edges.unpersist()
-    val batchStamped = gen.map(g => batch.withColumn("gen", lit(g))).getOrElse(batch)
-    IvfIndex.appendPartitioned(batchStamped, vecCol, centroids, layoutPath)
+    IvfIndex.appendPartitioned(batch, vecCol, centroids, layoutPath)
   }
 
   /** Load a persisted k-NN graph (the [[knnJoinIvf]] /

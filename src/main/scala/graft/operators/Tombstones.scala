@@ -27,13 +27,14 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    [[Retrieval.compactPostings]] discipline) and clears the sidecar,
   *    so post-compaction plans carry no anti-join at all.
   *
-  * The sidecar rows are `(id LONG, upto_gen LONG)` regardless of the
+  * Every sidecar row is `(id LONG, upto_gen LONG)` regardless of the
   * artifact's own id column name: `upto_gen` is the highest generation
-  * the row kills, null on rows a plain [[append]] wrote (kill every
-  * generation). Every reader goes through ONE fixed read schema
-  * ([[sidecar]]), so no sidecar read pays a schema-inference job; filters
-  * name the artifact column explicitly (a graph artifact filters BOTH
-  * endpoint columns).
+  * the row kills. [[appendUpto]] writes the mutation's bound; a plain
+  * [[append]] (the non-generational layouts: IVF, PQ, LSH, dedup
+  * signatures) writes Long.MaxValue, kill every generation. Every
+  * reader goes through ONE fixed read schema ([[sidecar]]), so no
+  * sidecar read pays a schema-inference job; filters name the artifact
+  * column explicitly (a graph artifact filters BOTH endpoint columns).
   *
   * A mutation verb reads the sidecar ONCE under its lease: a [[View]]
   * collects the raw rows, folds them on the driver and keeps the fold
@@ -53,19 +54,14 @@ object Tombstones {
   def present(spark: SparkSession, base: String): Boolean =
     fsOf(spark, base).exists(new Path(s"$base/$subdir"))
 
-  /** The one read schema of every sidecar file: [[append]] writes `id`
-    * alone, [[appendUpto]] adds `upto_gen`; a file without the column
-    * reads it as null.
-    */
+  /** The one schema of every sidecar file, as [[appendUpto]] writes it. */
   private val sidecarSchema = StructType(Seq(
     StructField("id", LongType), StructField("upto_gen", LongType)))
 
-  /** The raw sidecar rows as (id, upto): a null `upto_gen` (a plain
-    * [[append]] row) reads as Long.MaxValue, kill every generation.
-    */
+  /** The raw sidecar rows as (id, upto). */
   private def sidecar(spark: SparkSession, base: String): DataFrame =
     spark.read.schema(sidecarSchema).parquet(s"$base/$subdir")
-      .select(col("id"), coalesce(col("upto_gen"), lit(Long.MaxValue)).as("upto"))
+      .select(col("id"), col("upto_gen").as("upto"))
 
   /** Tombstone ids as a 1-column (`id` LONG) frame. */
   def ids(spark: SparkSession, base: String): DataFrame =
@@ -74,12 +70,10 @@ object Tombstones {
   /** Append deletions: `idsDf`'s FIRST column (cast long) are the ids to
     * tombstone. Idempotent at read time (the anti-join dedups); appends
     * under the artifact's own directory so the ids version with it.
-    * Rows written here carry no generation bound, so generation-aware
-    * readers treat them as kill-EVERY-generation ([[tombs]]).
+    * The rows carry `upto_gen = Long.MaxValue`: kill every generation.
     */
   def append(spark: SparkSession, base: String, idsDf: DataFrame): Unit =
-    idsDf.select(col(idsDf.columns.head).cast("long").as("id"))
-      .write.mode("append").parquet(s"$base/$subdir")
+    appendUpto(spark, base, idsDf, Long.MaxValue)
 
   /** Generation-SCOPED tombstone: kills only the rows of each id whose
     * `gen` stamp is <= `uptoGen`; rows appended later (a higher
@@ -87,9 +81,7 @@ object Tombstones {
     * in-place upsert verb append-only — tombstone the standing rows at
     * upto = g-1, append the replacement batch at gen = g — and lets a
     * deleted id be REUSED without a compact (delete at upto = current
-    * generation, re-insert at a later one). Plain [[append]] rows read
-    * as upto = Long.MaxValue (delete-forever, the pre-generation
-    * semantics old sidecars carry).
+    * generation, re-insert at a later one).
     */
   def appendUpto(spark: SparkSession, base: String, idsDf: DataFrame, uptoGen: Long): Unit =
     idsDf.select(col(idsDf.columns.head).cast("long").as("id"),
@@ -105,38 +97,36 @@ object Tombstones {
 
   /** The DISTINCT ids whose RAW sidecar rows carry exactly
     * `upto_gen = upto` — one mutation batch's own tombstone appends.
-    * Deliberately NOT the max-folded [[tombs]] view: an id that also
-    * carries a legacy kill-forever row (upto = MaxValue) folds past any
-    * generation-scoped stamp there, which would hide it from callers
-    * probing for a specific batch (the re-link heal's victim set).
+    * Deliberately NOT the max-folded [[tombs]] view: an id a LATER batch
+    * tombstoned again folds past this batch's stamp, which would hide
+    * it from callers probing for a specific batch (the re-link heal's
+    * victim set).
     */
   def rawUpto(spark: SparkSession, base: String, upto: Long): DataFrame =
     sidecar(spark, base).where(col("upto") === upto).select(col("id")).distinct()
 
   /** The sidecar's PUBLISHED view, folded to (id, upto): the raw rows
-    * are gated by the publish rule — effective iff legacy kill-forever
-    * (upto = MaxValue) or already published (upto < publishedGen) —
-    * BEFORE the per-id max fold. Gating AFTER the fold is wrong: an id
-    * with an older published tombstone (upto = u₀, effective) plus a
-    * newer UNPUBLISHED one (upto = g−1 ≥ publishedGen, a second
-    * mutation of the same doc in flight) folds to g−1, the gate drops
-    * the whole fold, and the published tombstone's effect is lost — a
-    * concurrent reader mid-mutation would see the previously-superseded
-    * rows resurrect (duplicate doclen rows, corrupted N/avgdl/df).
+    * are gated by the publish rule — effective iff already published
+    * (upto < publishedGen) — BEFORE the per-id max fold. Gating AFTER
+    * the fold is wrong: an id with an older published tombstone (upto =
+    * u₀, effective) plus a newer UNPUBLISHED one (upto = g−1 ≥
+    * publishedGen, a second mutation of the same doc in flight) folds to
+    * g−1, the gate drops the whole fold, and the published tombstone's
+    * effect is lost — a concurrent reader mid-mutation would see the
+    * previously-superseded rows resurrect (duplicate doclen rows,
+    * corrupted N/avgdl/df).
     */
   def tombsPublished(spark: SparkSession, base: String, publishedGen: Long): DataFrame =
     sidecar(spark, base)
-      .where(col("upto") === Long.MaxValue || col("upto") < publishedGen)
+      .where(col("upto") < publishedGen)
       .groupBy("id").agg(max("upto").as("upto"))
 
   /** [[filterGen]] restricted to PUBLISHED tombstones: a tombstone row
     * takes effect only once the artifact's published generation has
-    * moved past it (`upto < publishedGen`), with legacy kill-forever
-    * rows (upto = MaxValue — written by pre-generation deletes) always
-    * effective. This is the read half of the text index's atomic
-    * publish: a mutation appends data at gen g and its tombstone at
-    * upto = g-1 while `publishedGen = g-1`, and BOTH stay invisible
-    * (rows gated by gen <= publishedGen, the tombstone by
+    * moved past it (`upto < publishedGen`). This is the read half of the
+    * text index's atomic publish: a mutation appends data at gen g and
+    * its tombstone at upto = g-1 while `publishedGen = g-1`, and BOTH
+    * stay invisible (rows gated by gen <= publishedGen, the tombstone by
     * upto < publishedGen) until ONE rename bumps `_pubgen` to g — so a
     * reader at any kill point sees exactly the pre-batch or the
     * post-batch index, never a mixed or duplicated state. The publish
@@ -238,36 +228,13 @@ object Tombstones {
       df.where((ua.isNull || col(genCol) > ua) && (ub.isNull || col(genCol) > ub))
     }
 
-  /** A generation-stamped table's merged schema with `gen` forced
-    * present — the one schema-inference job a [[readWithGen]] costs,
-    * which callers that read a table repeatedly ([[View]], the
-    * facade's serve frames) pay once and replay through [[readGen]].
+  /** Read a generation-stamped table. Every writer of one (the build
+    * at generation 0, each mutation at its own, the fold's restamp to
+    * 0) writes the same columns with `gen` in them, so one file's
+    * schema is the table's.
     */
-  def genSchema(spark: SparkSession, path: String): StructType = {
-    val s = spark.read.option("mergeSchema", "true").parquet(path).schema
-    if (s.fieldNames.contains("gen")) s else s.add("gen", LongType)
-  }
-
-  /** [[readWithGen]] under a recorded [[genSchema]]: the same rows and
-    * columns in the same order (a `gen` the files lack reads as null and
-    * coalesces to 0), with no schema-inference job.
-    */
-  def readGen(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-      .withColumn("gen", coalesce(col("gen").cast("long"), lit(0L)))
-      .select(schema.fieldNames.map(col): _*)
-
-  /** Read a generation-stamped table: mergeSchema (files written before
-    * the table gained its `gen` column coexist with stamped appends)
-    * and a guaranteed `gen` column (absent or null reads as 0 — every
-    * pre-generation row belongs to generation 0 by definition).
-    */
-  def readWithGen(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true").parquet(path)
-    if (raw.columns.contains("gen"))
-      raw.withColumn("gen", coalesce(col("gen").cast("long"), lit(0L)))
-    else raw.withColumn("gen", lit(0L))
-  }
+  def readWithGen(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
 
   /** Generation-aware read filter: a row survives unless a tombstone
     * for its id covers its generation (`gen <= upto`). Strict
@@ -519,7 +486,7 @@ object Tombstones {
     if (present(spark, base)) compact(View(spark, base), tables)
 
   /** [[compact]] inside a verb that holds a [[View]]: the tables read
-    * under the view's schemas and the keep rule is the view's filter —
+    * through the view and the keep rule is the view's filter —
     * the driver-fold literal when the sidecar is under the inline cap —
     * so the fold scans each table once with no sidecar join; the view's
     * fold is cleared with the sidecar.
@@ -538,8 +505,6 @@ object Tombstones {
       // generation-stamped tables fold with the generation-aware keep
       // rule ([[filterGen]] semantics — the fold must preserve exactly
       // what the read filter serves); plain tables keep the anti-join.
-      // The rewrite stamps `gen` physically, so a table whose oldest
-      // files predate the column comes out schema-uniform.
       val kept = spec.genCol match {
         case Some(g) =>
           spec.filterCols.foldLeft(view.read(spec.rel)) { (df, c) =>
@@ -597,18 +562,17 @@ object Tombstones {
     * everything the verb would otherwise re-read per action is read
     * here once.
     *
-    *  - `schemas`: each layout table's [[genSchema]] (one inference job
-    *    per table); [[read]] replays it ([[readGen]]), so the verb's
-    *    reads return what [[readWithGen]] would with no
-    *    schema-inference job. Tables not registered fall back to
-    *    readWithGen.
+    *  - `schemas`: the declared schemas of the layout tables the
+    *    caller reads (the GRAPH tables, [[GraphMaintenance]]); [[read]]
+    *    reads a table under its schema with no schema-inference job,
+    *    and any other table through [[readWithGen]].
     *  - the raw sidecar rows, collected once (≤ [[InlineCap]]) and
     *    folded on the driver: the verb's filters become the
-    *    [[filterGenInline]] literals, and the dead-id count, a batch's
-    *    own tombstones ([[rawUpto]]) and the kill-all ids are driver
-    *    lookups. Over the cap the fold is None and every answer falls
-    *    back to today's sidecar reads and broadcast-join filters. The
-    *    verb's own [[appendUpto]] / [[clear]] keep the fold current.
+    *    [[filterGenInline]] literals, and the dead-id count and a
+    *    batch's own tombstones ([[rawUpto]]) are driver lookups. Over
+    *    the cap the fold is None and every answer falls back to today's
+    *    sidecar reads and broadcast-join filters. The verb's own
+    *    [[appendUpto]] / [[clear]] keep the fold current.
     */
   final class View private (val spark: SparkSession, val base: String,
                             schemas: Map[String, StructType],
@@ -620,12 +584,9 @@ object Tombstones {
 
     private def path(rel: String) = if (rel.isEmpty) base else s"$base/$rel"
 
-    /** The table's merged schema with `gen` forced in, when registered. */
-    def schema(rel: String): Option[StructType] = schemas.get(rel)
-
-    /** [[readWithGen]] of a table under the recorded schema. */
+    /** A table of the artifact, under its declared schema if it has one. */
     def read(rel: String): DataFrame = schemas.get(rel) match {
-      case Some(s) => readGen(spark, path(rel), s)
+      case Some(s) => spark.read.schema(s).parquet(path(rel))
       case None    => readWithGen(spark, path(rel))
     }
 
@@ -707,21 +668,17 @@ object Tombstones {
   }
 
   object View {
-    /** Open a view of `base`: the [[genSchema]] of each existing table in
-      * `genTables` (relative to `base`), `fixed` schemas registered as
-      * given, and the sidecar rows collected and folded — at most one job
-      * per inferred table plus one for the sidecar.
+    /** Open a view of `base` whose tables (relative to `base`) read under
+      * `schemas`, with the sidecar rows collected and folded — at most
+      * one job.
       */
-    def apply(spark: SparkSession, base: String, genTables: Seq[String] = Nil,
-              fixed: Map[String, StructType] = Map.empty, cap: Int = InlineCap): View = {
-      val fs = fsOf(spark, base)
-      val inferred = genTables.filter(rel => fs.exists(new Path(s"$base/$rel")))
-        .map(rel => rel -> genSchema(spark, s"$base/$rel")).toMap
+    def apply(spark: SparkSession, base: String,
+              schemas: Map[String, StructType] = Map.empty, cap: Int = InlineCap): View = {
       val live = present(spark, base)
       val raw =
         if (!live) Some(ArrayBuffer.empty[(Long, Long)])
         else rawRows(spark, base, cap).map(r => ArrayBuffer(r.toSeq: _*))
-      new View(spark, base, fixed ++ inferred, live, raw, cap)
+      new View(spark, base, schemas, live, raw, cap)
     }
   }
 

@@ -1427,6 +1427,115 @@ class ApiSpec extends SparkSpec {
     assert(!graft.operators.Tombstones.present(spark, dirB), "compact must clear the sidecar")
   }
 
+  /** The declared GRAPH schemas against what the files hold (inferred
+    * here, merging every file, so one drifting append cannot hide; the
+    * fixture's rows are null-free, so a null marks a file that lacks a
+    * declared column), and the sidecar's row shape: every row carries
+    * its `upto_gen`.
+    */
+  private def assertLayout(dir: String, tag: String): Unit = {
+    import graft.operators.{GraphMaintenance, Tombstones}
+    import org.apache.spark.sql.functions.col
+    def merged(rel: String) = spark.read.option("mergeSchema", "true").parquet(s"$dir/$rel")
+    GraphMaintenance.Schemas.foreach { case (rel, declared) =>
+      val t = merged(rel)
+      assert(t.schema === declared, s"$tag: $rel no longer matches its declared schema")
+      assert(t.where(declared.fieldNames.map(col(_).isNull).reduce(_ || _)).isEmpty,
+        s"$tag: a $rel file lacks a declared column")
+    }
+    if (Tombstones.present(spark, dir))
+      assert(merged("_tombstones").where(col("upto_gen").isNull).isEmpty,
+        s"$tag: a sidecar row without upto_gen")
+  }
+
+  test("layout drift: flat and routed GRAPH writers match the declared schemas through every verb, text tables carry gen") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.functions.{col, min}
+    val rnd = new scala.util.Random(53)
+    val centers = Array.fill(6)(Array.fill(8)(rnd.nextGaussian().toFloat * 10))
+    def mk(i: Int): (Long, Array[Float], Option[String]) =
+      (i.toLong, centers(i % 6).map(x => x + rnd.nextGaussian().toFloat), Some(s"""{"g": ${i % 2}}"""))
+    val rows = (0 until 240).map(mk)
+    // the routed arm saves under the conf that puts ivfClusters = 6
+    // above the routed-K threshold
+    for (routed <- Seq(false, true)) {
+      val arm = if (routed) "routed" else "flat"
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-api-layout-$arm").toString
+      if (routed) spark.conf.set("spark.graft.routed.kThreshold", "4")
+      try {
+        VectorIndex.create(spark, IndexType.GRAPH, 8, Metric.L2,
+            IndexParams(ivfClusters = 6, graphK = 5, graphBeam = 8, graphHops = 2))
+          .insertAll(rows.toDF("id", "vectors", "data"))
+          .save(dir)
+        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/quantizer")) === routed)
+        var idx = VectorIndex.load(spark, dir)
+        assertLayout(dir, s"$arm save")
+        // the delete takes a live medoid entry too, so the entry heal
+        // appends a re-seeded entry
+        val deleted = Seq(11L, 17L, 23L)
+        def liveEntry(): Long = operators.Tombstones.filterGen(
+            operators.GraphMaintenance.read(spark, dir, "serve/entries"), dir, "id", "gen")
+          .where(!col("id").isin(deleted: _*)).agg(min("id")).head.getLong(0)
+        val steps: Seq[(String, VectorIndex => VectorIndex)] = Seq(
+          "upsert" -> (_.upsert(7L, centers(2).map(_ + 0.5f), "{\"g\": 1}")),
+          "delete" -> (i => i.deleteAll((deleted :+ liveEntry()).toDF("id"))),
+          "insert" -> (_.insertAll((500 until 506).map(mk).toDF("id", "vectors", "data"))),
+          "compact" -> (_.compact()))
+        steps.foreach { case (verb, step) =>
+          idx = step(idx)
+          assertLayout(dir, s"$arm $verb")
+        }
+        assert(idx.count === 242L)
+      } finally spark.conf.unset("spark.graft.routed.kThreshold")
+    }
+
+    // text: the build stamps gen 0 and every later writer its own
+    val docs = graft.sources.Tables.documents(spark, sf001).select("doc_id", "text")
+      .where(col("doc_id") < 60)
+    val tdir = java.nio.file.Files.createTempDirectory("graft-api-layout-text").toString
+    var text = TextIndex.build(docs.where(col("doc_id") < 40), "doc_id", "text", tdir)
+    def assertGen(tag: String): Unit = {
+      for (rel <- Seq("postings", "doclen")) {
+        val t = spark.read.option("mergeSchema", "true").parquet(s"$tdir/$rel")
+        assert(t.columns.contains("gen") && t.where(col("gen").isNull).isEmpty,
+          s"$tag: $rel rows without gen")
+      }
+      if (graft.operators.Tombstones.present(spark, tdir))
+        assert(spark.read.option("mergeSchema", "true").parquet(s"$tdir/_tombstones")
+          .where(col("upto_gen").isNull).isEmpty, s"$tag: a sidecar row without upto_gen")
+    }
+    assertGen("build")
+    val textSteps: Seq[(String, TextIndex => TextIndex)] = Seq(
+      "append" -> (_.append(docs.where(col("doc_id") >= 40), "doc_id", "text")),
+      "upsert" -> (_.upsert(Seq((3L, "an entirely new body")).toDF("doc_id", "text"),
+        "doc_id", "text")),
+      "delete" -> (_.delete(Seq(5L).toDF("doc_id"))),
+      "compact" -> (_.compact()))
+    textSteps.foreach { case (verb, step) =>
+      text = step(text)
+      assertGen(verb)
+    }
+  }
+
+  test("load refuses an artifact without a current-layout manifest and names the re-save or rebuild") {
+    val s = spark; import s.implicits._
+    for (rel <- Seq("serve/_entrycount", "_ids")) {
+      val (dir, _, _) = crashFixture(s"guard-${rel.replace('/', '-')}")
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$rel")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      val e = intercept[IllegalArgumentException](VectorIndex.load(spark, dir))
+      assert(e.getMessage.contains(rel) && e.getMessage.contains("re-save"), e.getMessage)
+    }
+    val tdir = java.nio.file.Files.createTempDirectory("graft-api-guard-text").toString
+    TextIndex.build(Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
+      "doc_id", "text", tdir)
+    val p = new org.apache.hadoop.fs.Path(s"$tdir/_pubgen")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    val e = intercept[IllegalArgumentException](TextIndex.load(spark, tdir))
+    assert(e.getMessage.contains("_pubgen") && e.getMessage.contains("rebuild"), e.getMessage)
+  }
+
   test("crash-injection: an upsert on a handle opened before the crash resumes windows 1-3 through verb-entry recovery") {
     import graft.operators.{GraphMaintenance, IvfIndex, Tombstones}
     import org.apache.spark.sql.functions._
@@ -1508,10 +1617,11 @@ class ApiSpec extends SparkSpec {
   test("job budget: one GRAPH upsert, delete, insert and search stay within their Spark-job budgets") {
     val (dir, rows, _) = crashFixture("budget")
     var idx = VectorIndex.load(spark, dir)
-    idx.search(rows(1)._2, 5).collect() // the serve schemas are recorded here
-    // each verb reads the sidecar and the layout schemas once under its
-    // lease; a change that brings back per-action sidecar folds, schema
-    // merges or recovery probes on the fresh path overruns these
+    idx.search(rows(1)._2, 5).collect()
+    // each verb reads the sidecar once under its lease and the layout
+    // under the declared schemas; a change that brings back per-action
+    // sidecar folds, schema inference or recovery probes on the fresh
+    // path overruns these
     val budgets = Seq[(String, Int, () => Unit)](
       ("upsert", UpsertJobs, () => idx = idx.upsert(5L, rows(5)._2.map(_ + 3f))),
       ("search after a mutation", SearchJobs, () => idx.search(rows(2)._2, 5).collect()),
@@ -1524,12 +1634,12 @@ class ApiSpec extends SparkSpec {
     }
   }
 
-  // measured on the crash fixture (local[8], 4 shuffle partitions): 18 /
-  // 8 / 17 jobs per upsert / delete / insert, plus one of slack for an
+  // measured on the crash fixture (local[8], 4 shuffle partitions): 15 /
+  // 5 / 14 jobs per upsert / delete / insert, plus one of slack for an
   // AQE stage split; a search after a mutation runs hops + 1 walk
   // collects, its final action and the one sidecar collect
-  private val UpsertJobs = 19
-  private val DeleteJobs = 9
-  private val InsertJobs = 18
+  private val UpsertJobs = 16
+  private val DeleteJobs = 6
+  private val InsertJobs = 15
   private val SearchJobs = 6
 }

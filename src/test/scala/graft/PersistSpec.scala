@@ -212,23 +212,6 @@ class PersistSpec extends SparkSpec {
     assert(reloaded.insert(999L, Array.fill(64)(0.5f)).count === idx.count + 1)
   }
 
-  test("pre-lsh_bands meta (8-column save format) still loads with default bands=1") {
-    val rows = Tables.embeddings(spark, sf001).limit(20)
-      .select(col("vec_id").as("id"), col("embedding").as("vectors"))
-    val idx = VectorIndex.create(spark, IndexType.LSH, 64, Metric.L2).insertAll(rows)
-    val path = tmp("graft-vidx-oldmeta")
-    idx.save(path)
-    // rewrite meta WITHOUT the lsh_bands column (the older wire format)
-    val s = spark; import s.implicits._
-    Seq(("LSH", 64, "l2", 16, 4, 4, 1, 100))
-      .toDF("index_type", "dim", "metric", "ivf_clusters", "nprobe", "lsh_bits",
-        "lsh_radius", "binary_rerank")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    val reloaded = VectorIndex.load(spark, path)
-    assert(reloaded.params.lshBands === 1 && reloaded.params.binaryRerank === 100)
-    assert(reloaded.count === 20L)
-  }
-
   test("empty index save -> load round trip (FLAT, IVF, LSH and BINARY degrade cleanly)") {
     for (kind <- Seq(IndexType.FLAT, IndexType.IVF, IndexType.LSH, IndexType.BINARY)) {
       val idx = VectorIndex.create(spark, kind, 2, Metric.L2)
@@ -571,7 +554,7 @@ class PersistSpec extends SparkSpec {
     assert(spark.read.parquet(base).collect().map(_.toSeq.toSeq).toSet === want)
   }
 
-  test("deleted-id reuse is LEGAL without compact (generation-scoped deletes); live dups and legacy kill-all tombstones stay loud") {
+  test("deleted-id reuse is LEGAL without compact (generation-scoped deletes); live dups stay loud") {
     val s = spark; import s.implicits._
     val docs = Tables.documents(spark, sf001).select("doc_id", "text").limit(200)
     val path = tmp("graft-text-reuse")
@@ -597,19 +580,6 @@ class PersistSpec extends SparkSpec {
       idx.append(docs.where(col("doc_id") === victim), "doc_id", "text")
     }
     assert(e1.getMessage.contains("new-docs-only"), e1.getMessage)
-    // LEGACY kill-all tombstones (plain sidecar rows a pre-generation
-    // delete wrote) still block reuse with the compact() unlock — they
-    // cover every generation, so appended rows would be hidden
-    graft.operators.Tombstones.append(spark, path, Seq(777L).toDF("id"))
-    val legacy = docs.where(col("doc_id") === victim)
-      .select(lit(777L).as("doc_id"), col("text"))
-    val e2 = intercept[IllegalArgumentException] {
-      idx.append(legacy, "doc_id", "text")
-    }
-    assert(e2.getMessage.contains("kill-all"), e2.getMessage)
-    idx.compact()
-    idx.append(legacy, "doc_id", "text")
-    assert(idx.docLengths.where(col("doc_id") === 777L).count() === 1L)
   }
 
   test("DedupIndex.append rejects standing AND tombstoned doc_ids loudly") {
